@@ -425,31 +425,146 @@ def test_query_chunked_semantics(api, spark):
     assert status == 400
 
 
-def test_query_chunked_auth_up_front(api, spark):
+def _query(api, params: dict, chunked: bool):
+    """One /query in either mode as ``(status, body)``; a chunked 200
+    body is folded into one ``{"results": [...]}`` in stream order."""
+    if not chunked:
+        return api.handle_query(params)
+    status, chunks = api.handle_query_chunked(params)
+    envs = list(chunks)
+    if status != 200:
+        (body,) = envs
+        return status, body
+    return status, {"results": [r for env in envs for r in env["results"]]}
+
+
+def _per_statement(body: dict) -> dict:
+    """statement_id → its values concatenated across series and chunks,
+    and its in-body error."""
+    out: dict = {}
+    for res in body["results"]:
+        got = out.setdefault(
+            res["statement_id"], {"values": [], "error": None}
+        )
+        for s in res.get("series", []):
+            got["values"] += s["values"]
+        if "error" in res:
+            got["error"] = res["error"]
+    return out
+
+
+_ADMIN = {"u": "admin", "p": "a"}
+_DELETE_THEN_SELECT = (
+    "DELETE FROM campus_flow WHERE buildingID = 'A'; "
+    "SELECT flowRate FROM campus_flow"
+)
+REQUEST_CASES = [
+    ("missing_q", dict(_ADMIN), 400, "missing required parameter 'q'"),
+    ("bad_epoch_empty_result",
+     {"q": "SELECT flowRate FROM campus_flow WHERE time < '2000-01-01'",
+      "epoch": "eons", **_ADMIN},
+     400, "invalid epoch precision: 'eons'"),
+    ("bad_epoch_after_delete",
+     {"q": _DELETE_THEN_SELECT, "epoch": "eons", **_ADMIN},
+     400, "invalid epoch precision: 'eons'"),
+    ("empty_epoch_is_rfc3339",
+     {"q": "SELECT flowRate FROM campus_flow ORDER BY time", "epoch": "",
+      **_ADMIN},
+     200, None),
+    ("no_credentials", {"q": "SELECT flowRate FROM campus_flow"},
+     401, "authentication failed: credentials required"),
+    ("wrong_password",
+     {"q": "SELECT flowRate FROM campus_flow", "u": "reader", "p": "WRONG"},
+     401, "authentication failed for user 'reader'"),
+    ("second_statement_denied",
+     {"q": _DELETE_THEN_SELECT, "u": "writer", "p": "w"},
+     403, "permission denied: 'writer' lacks READ on 'ciwsdb'"),
+    ("registered_database_grant",
+     {"q": "SELECT flowRate FROM campus_flow ORDER BY time",
+      "u": "reader", "p": "p"},
+     200, None),
+]
+
+
+@pytest.mark.parametrize(
+    "params,status,error",
+    [c[1:] for c in REQUEST_CASES],
+    ids=[c[0] for c in REQUEST_CASES],
+)
+def test_query_request_cases_agree_across_modes(
+    api, spark, params, status, error
+):
+    """Buffered and chunked /query answer every request-level case
+    with the same status and body. The request is validated and every
+    statement authorized, against the store's registered database,
+    before any statement runs: a rejected request leaves the store
+    untouched."""
     from ciws_server_spark.plans.influxql import run_influxql
 
-    run_influxql(
-        spark, {}, "CREATE USER reader WITH PASSWORD 'p'",
-        table_dir=api.table_dir,
+    for stmt in (
+        "CREATE DATABASE ciwsdb",
+        "CREATE USER admin WITH PASSWORD 'a' WITH ALL PRIVILEGES",
+        "CREATE USER reader WITH PASSWORD 'p'",
+        "GRANT READ ON ciwsdb TO reader",
+        "CREATE USER writer WITH PASSWORD 'w'",
+        "GRANT WRITE ON ciwsdb TO writer",
+    ):
+        run_influxql(spark, {}, stmt, table_dir=api.table_dir)
+    bodies = []
+    for chunked in (False, True):
+        got_status, body = _query(api, dict(params), chunked)
+        assert got_status == status, (chunked, body)
+        if error is not None:
+            assert body == {"error": error}, chunked
+        rows = sinks.read_table(spark, api.table_dir, "campus_flow").count()
+        assert rows == 2, chunked
+        bodies.append(body)
+    assert bodies[0] == bodies[1]
+
+
+def test_query_statement_results_agree_across_modes(api):
+    """One read-only multi-statement request gives the same values and
+    in-body errors per statement_id in both modes: a good SELECT (two
+    one-row chunks), an unknown measurement (InfluxQLError) and a plan
+    Spark cannot analyze (AnalysisException)."""
+    params = {
+        "q": "SELECT flowRate FROM campus_flow ORDER BY time; "
+             "SELECT v FROM nope; SELECT date + 1 FROM campus_flow",
+        "chunk_size": "1",
+    }
+    got = {}
+    for chunked in (False, True):
+        status, body = _query(api, dict(params), chunked)
+        assert status == 200, body
+        got[chunked] = _per_statement(body)
+    assert got[False] == got[True]
+    assert got[False][0] == {
+        "values": [["2024-01-01T06:00:00Z", 2.5],
+                   ["2024-01-01T06:30:00Z", 7.5]],
+        "error": None,
+    }
+    assert got[False][1] == {
+        "values": [], "error": "unknown measurement: 'nope'"
+    }
+    assert got[False][2]["error"].startswith("invalid statement: ")
+
+
+def test_write_authorizes_against_registered_database(api, spark):
+    """/write checks the WRITE grant on the store's registered database
+    when the request names none, as /query does."""
+    from ciws_server_spark.plans.influxql import run_influxql
+
+    for stmt in (
+        "CREATE DATABASE ciwsdb",
+        "CREATE USER writer WITH PASSWORD 'w'",
+        "GRANT WRITE ON ciwsdb TO writer",
+    ):
+        run_influxql(spark, {}, stmt, table_dir=api.table_dir)
+    status, resp = api.handle_write(
+        {"u": "writer", "p": "w", "precision": "s"},
+        b"campus_flow,buildingID=C flowRate=1.5 1704085200\n",
     )
-    run_influxql(
-        spark, {}, "GRANT READ ON ciws TO reader", table_dir=api.table_dir,
-    )
-    # no credentials -> 401 before any streaming
-    status, body = api.handle_query_chunked(
-        {"q": "SELECT flowRate FROM campus_flow"}
-    )
-    assert status == 401
-    # privilege failure on ANY statement -> request-level 403
-    status, body = api.handle_query_chunked(
-        {"q": "SELECT flowRate FROM campus_flow; DELETE FROM campus_flow",
-         "u": "reader", "p": "p"}
-    )
-    assert status == 403
-    status, chunks = api.handle_query_chunked(
-        {"q": "SELECT flowRate FROM campus_flow", "u": "reader", "p": "p"}
-    )
-    assert status == 200 and list(chunks)
+    assert status == 204, resp
 
 
 def test_query_chunked_over_socket(api):

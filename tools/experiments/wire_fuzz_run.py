@@ -2,7 +2,9 @@
 net (VERDICT r11 ask #3) — every statement the grammar fuzz can draw
 routed through ``InfluxHTTPApi.handle_query`` (and, for a sampled
 slice, ``handle_query_chunked``) against a REAL store dir, plus
-generated line-protocol batches through ``handle_write``.
+generated line-protocol batches through ``handle_write``. In the
+chunked slice every READ-only statement is also sent through
+``handle_query``, and the two modes must answer with the same status.
 
 What this exercises that the dispatcher-level fuzz can't see:
 statement splitting, credential plumbing, the JSON serializer
@@ -100,6 +102,7 @@ def gen_write_body(r: random.Random) -> bytes:
 
 
 def main() -> None:
+    from ciws_server_spark.plans import users
     from ciws_server_spark.session import get_spark
     from ciws_server_spark.sources.http_api import InfluxHTTPApi
     from tests.test_influxql_statement_fuzz import gen_statement
@@ -110,7 +113,7 @@ def main() -> None:
     t0 = time.time()
     counts = {
         "q200": 0, "q400": 0, "q401": 0, "q403": 0,
-        "chunked": 0, "chunks": 0,
+        "chunked": 0, "chunks": 0, "cross_checked": 0,
         "w204": 0, "w400": 0, "writes": 0,
         "rebuilds": 0,
     }
@@ -142,6 +145,14 @@ def main() -> None:
                     else:
                         for env in body:
                             json.dumps(env)
+                    if users.required_privilege(stmt) == "READ":
+                        # a READ statement mutates nothing, so the
+                        # buffered mode must give the same request the
+                        # same status
+                        counts["cross_checked"] += 1
+                        bstatus, bbody = api.handle_query(params)
+                        json.dumps(bbody)
+                        assert bstatus == status, (stmt, status, bbody)
                 elif r.random() < 0.10:
                     # max-row-limit slice (r12 ask #7): the same
                     # statement through a capped front door — the
