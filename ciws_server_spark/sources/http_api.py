@@ -65,7 +65,12 @@ import time
 from datetime import date, datetime, timedelta, timezone
 from decimal import Decimal
 
-from pyspark.errors import AnalysisException
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException, PySparkException
+from pyspark.errors.exceptions.captured import (
+    UnknownException,
+    convert_exception,
+)
 from pyspark.sql import DataFrame, functions as F
 
 from ..plans import users
@@ -131,31 +136,51 @@ def _is_snapshot_race(exc: BaseException) -> bool:
     return any(m in str(exc) for m in _SNAPSHOT_RACE_MARKERS)
 
 
-def _analysis_msg(exc: BaseException) -> str:
-    """The formatting rule for AnalysisException wire errors: the JVM
-    message without the error-class prefix noise when the API offers
-    it."""
+def _spark_msg(exc: BaseException) -> str:
+    """The formatting rule for Spark wire errors: the JVM message
+    without the stack trace when the exception offers it."""
     return str(
         exc.getMessage() if hasattr(exc, "getMessage") else exc
     )
 
 
-def _statement_error(statement_id: int, exc: Exception) -> dict:
-    """The in-body result object for a statement that failed to run
-    (upstream's runtime-error shape, the same in both /query modes).
+def _spark_error(exc: BaseException) -> PySparkException | None:
+    """The Spark error ``exc`` is or wraps, as a PySpark exception, or
+    None when ``exc`` is not one. A raw Py4J error is unwrapped cause
+    by cause down to the first Java exception PySpark converts: an
+    executor failure during a chunked drain arrives nested under the
+    local-iterator server's ``awaitResult`` wrappers."""
+    if isinstance(exc, PySparkException):
+        return exc
+    cause = exc.java_exception if isinstance(exc, Py4JJavaError) else None
+    while cause is not None:
+        captured = convert_exception(cause)
+        if not isinstance(captured, UnknownException):
+            return captured
+        cause = cause.getCause()
+    return None
 
-    A translated plan that Spark cannot resolve (AnalysisException) is
-    a statement error too, never a raised exception or a non-JSON
-    response. An AnalysisException that is a snapshot race which
-    outlived the typed retry is labelled transient contention instead,
-    so clients retry rather than treat the statement as invalid."""
-    msg = str(exc)
-    if isinstance(exc, AnalysisException):
-        msg = _analysis_msg(exc)
-        if _is_snapshot_race(exc):
-            msg = f"storage contention persisted: {msg}; retry the statement"
-        else:
-            msg = f"invalid statement: {msg}"
+
+def _statement_error(statement_id: int, exc: Exception) -> dict | None:
+    """The in-body result object for a statement that failed to run
+    (upstream's runtime-error shape, the same in both /query modes),
+    or None when ``exc`` is not a statement failure — the caller
+    re-raises it.
+
+    A statement fails with an InfluxQLError (including the contention
+    retry's "storage contention persisted", the one place that judges
+    storage races) or with a Spark error: a plan Spark cannot resolve
+    (AnalysisException, an invalid statement) or one that fails while
+    it runs (e.g. ANSI CAST_INVALID_INPUT). Either way it is an
+    in-body error, never a raised exception or a non-JSON response."""
+    if isinstance(exc, InfluxQLError):
+        return {"statement_id": statement_id, "error": str(exc)}
+    spark_exc = _spark_error(exc)
+    if spark_exc is None:
+        return None
+    msg = _spark_msg(spark_exc)
+    if isinstance(spark_exc, AnalysisException):
+        msg = f"invalid statement: {msg}"
     return {"statement_id": statement_id, "error": msg}
 
 
@@ -196,7 +221,9 @@ def _snapshot_fingerprint(table_dir: str | None):
 def _run_with_contention_retry(fn, table_dir: str | None = None):
     """Run ``fn`` retrying storage-contention exceptions (compactor
     lock, optimistic-concurrency abort, snapshot-race read); re-raises
-    anything else (including InfluxQLError) untouched.
+    anything else (including InfluxQLError) untouched. Contention that
+    outlives its budget is raised as an InfluxQLError saying so — the
+    only place a /query error is labelled contention.
 
     A marker-matched generic exception only counts as a snapshot race
     when the storage fingerprint MOVED while ``fn`` ran (typed check,
@@ -215,16 +242,19 @@ def _run_with_contention_retry(fn, table_dir: str | None = None):
         except InfluxQLError:
             raise
         except Exception as exc:  # noqa: BLE001 — filtered re-raise
-            races += 1
-            if not _is_snapshot_race(exc) or races > _SNAPSHOT_RACE_RETRIES:
-                raise
-            if (
+            if not _is_snapshot_race(exc) or (
                 before is not None
                 and _snapshot_fingerprint(table_dir) == before
             ):
                 # no table version moved while fn ran: the message
                 # matched a marker but nothing raced — genuine error
                 raise
+            races += 1
+            if races > _SNAPSHOT_RACE_RETRIES:
+                raise InfluxQLError(
+                    f"storage contention persisted: {_spark_msg(exc)};"
+                    " retry the statement"
+                ) from exc
             time.sleep(_CONTENTION_BACKOFF_S)
 
 
@@ -650,8 +680,11 @@ class InfluxHTTPApi:
                 out, lease_pin = _run_with_contention_retry(
                     run, self.table_dir
                 )
-            except (InfluxQLError, AnalysisException) as exc:
-                yield _statement_error(i, exc)
+            except Exception as exc:  # noqa: BLE001 — filtered re-raise
+                err = _statement_error(i, exc)
+                if err is None:
+                    raise
+                yield err
                 continue
             if not isinstance(out, DataFrame):
                 yield out
@@ -661,16 +694,19 @@ class InfluxHTTPApi:
                     out, _series_name(stmt), i, epoch, chunk_size,
                     order_desc=statement_order_desc(stmt),
                 )
-            except Exception as exc:  # noqa: BLE001
-                if not _is_snapshot_race(exc):
+            except Exception as exc:  # noqa: BLE001 — filtered re-raise
+                # chunks already streamed can't be retried; a snapshot
+                # race or a Spark runtime error surfaces as an in-body
+                # statement error and later statements still run
+                err = (
+                    {"statement_id": i,
+                     "error": "snapshot changed mid-stream; re-run statement"}
+                    if _is_snapshot_race(exc)
+                    else _statement_error(i, exc)
+                )
+                if err is None:
                     raise
-                # chunks already streamed can't be retried; surface an
-                # in-body statement error and keep serving later
-                # statements
-                yield {
-                    "statement_id": i,
-                    "error": "snapshot changed mid-stream; re-run statement",
-                }
+                yield err
             finally:
                 # stream drained (or abandoned): release the source
                 # frames so their reader leases lapse

@@ -17,10 +17,15 @@ CSV to an archive (success) or quarantine (parse failure) directory
   make crash recovery re-read paths that no longer exist. Moves are
   idempotent (missing source = already moved = skipped).
 
-Idempotence under batch replay: when a ``batch_id`` is supplied, the
-append becomes a DYNAMIC PARTITION OVERWRITE of the
-``(…, batch_id=N)`` leaf partitions — replaying a crashed
-micro-batch rewrites exactly the partitions it wrote the first time,
+One write protocol for every table append (points, routed raw/QC
+points, quarantine and ingest manifests): one Spark job writes a
+private stage dir (``_staging``), then ``_publish`` renames the staged
+part files into each live table under its write lock.
+
+Idempotence under batch replay: when a ``batch_id`` is supplied, rows
+land in ``(…, batch_id=N)`` leaf partitions and ``_publish`` wipes
+every existing leaf of that batch before its renames — replaying a
+crashed micro-batch replaces exactly what its first attempt wrote,
 so table contents are exactly-once even though foreachBatch delivery
 is at-least-once (the reference double-ingests in this crash window,
 ``loader.py:68-84``; Delta's ``txnAppId`` idempotence is the managed
@@ -38,7 +43,7 @@ import sys
 import threading
 import time
 import weakref
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -410,7 +415,7 @@ def append_points(
     Fields may be added over time (the InfluxDB measurement model);
     every write merges its fields into the table's schema sidecar
     under the write lock, and a same-name/different-type write raises
-    :class:`SchemaConflict` before touching storage.
+    :class:`SchemaConflict` before any file reaches the table.
 
     VISIBILITY: publication is atomic PER FILE (each staged part file
     enters the live tree with one rename), not per batch — a reader
@@ -432,85 +437,93 @@ def append_points(
         out = out.withColumn("date", F.to_date("time"))
     if batch_id is not None:
         out = out.withColumn("batch_id", F.lit(int(batch_id)))
-    path = os.path.join(table_dir, table)
-    with table_write_lock(table_dir, table):
-        # sidecar BEFORE the root dir exists: load_tables only lists
-        # dirs, so the instant a reader can discover the table its
-        # registered schema is already on disk — a dir-without-
-        # sidecar gap reads as UNABLE_TO_INFER_SCHEMA on an empty
-        # table (wire-soak-found, r13)
-        _merge_registered_schema(path, out.schema)
-        _ensure_snapshot_root(path)
-        all_parts = parts + (["batch_id"] if batch_id is not None else [])
-        _staged_append(out, path, all_parts, batch_id)
+        parts = parts + ["batch_id"]
+    with _staging(table_dir, [table]) as stage:
+        out.write.mode("append").partitionBy(*parts).parquet(stage)
+        _publish(stage, os.path.join(table_dir, table), out.schema, batch_id)
 
 
-def _staged_append(
-    out: DataFrame, path: str, parts: list[str], batch_id: int | None
-) -> None:
-    """Stage-write + per-file rename: the one write protocol for both
-    plain appends and overwrite-by-batch. Caller holds the write lock.
+@contextmanager
+def _staging(table_dir: str, tables: list[str]):
+    """A private stage dir for ONE Spark write job into ``tables``.
 
-    NOT a direct ``write.mode("append")`` to the live root: two
+    Every writer stages here, never straight into a live root: two
     concurrent Spark jobs appending one path share Hadoop's
     FileOutputCommitter staging (``<path>/_temporary/0``), and the
     first commit's cleanup deletes the second job's in-flight task
     attempts (TASK_WRITE_FAILED — caught by
-    tests/test_multiwriter_soak.py). Stage each append in a PRIVATE
-    sibling dir, then rename the committed part files into the live
-    partition dirs — part names embed the job UUID, so concurrent
-    appends never collide, and the shared write lock stays shared.
+    tests/test_multiwriter_soak.py). The committed part files are then
+    renamed into the live tables by :func:`_publish`; part names embed
+    the job UUID, so concurrent appends never collide.
 
-    With ``batch_id``, idempotent overwrite-by-batch is this same
-    protocol plus a pre-rename wipe of every existing ``batch_id=N``
-    leaf: replaying a crashed micro-batch first clears what its
-    earlier attempt landed, then renames the new files in. r14: this
-    replaced Spark's ``partitionOverwriteMode=dynamic`` writer, which
-    stages to ``_temporary`` and then walks/moves partition DIRS
-    driver-side — measured 2–4× slower per micro-batch at the ingest
-    benchmark's file sizes, the per-file constant the bench had been
-    flat on for four rounds. Replay convergence is also strictly
-    stronger: dynamic overwrite only replaces partitions present in
-    the NEW attempt; the explicit wipe clears every leaf the crashed
-    attempt touched, even for keys the replay no longer produces.
-    """
-    import glob as _glob
+    One naming rule, ``<first target root>.append-<uuid>`` (targets in
+    sorted order), and the shared write lock of EVERY target held,
+    in that same order, from before the write until the stage is
+    removed: so a stage dir that survives its writer (a crash) is
+    orphaned exactly when the first target's compactor holds that
+    table's lock exclusively, which is where ``_compact_locked``
+    sweeps ``<root>.append-*``."""
     import uuid
 
-    stage = f"{path}.append-{uuid.uuid4().hex[:12]}"
-    try:
-        out.write.mode("append").partitionBy(*parts).parquet(stage)
-        # an all-empty append must still materialize the table
-        # root (read_table on a written-but-empty target reads
-        # the sidecar schema over an empty dir)
-        if not os.path.lexists(path):
-            os.makedirs(path)
-        if batch_id is not None:
-            # wipe THIS batch's earlier leaves (idempotent replay).
-            # batch_id is the innermost partition level, so the glob
-            # is exact; other batches' leaves are untouched.
-            pat = os.path.join(
-                path,
-                *(["*"] * (len(parts) - 1)),
-                f"batch_id={int(batch_id)}",
-            )
-            for leaf in _glob.glob(pat):
-                shutil.rmtree(leaf, ignore_errors=True)
-        for dirpath, dirnames, files in os.walk(stage):
+    tables = sorted(tables)
+    with ExitStack() as locks:
+        for table in tables:
+            locks.enter_context(table_write_lock(table_dir, table))
+        stage = os.path.join(
+            table_dir, f"{tables[0]}.append-{uuid.uuid4().hex[:12]}"
+        )
+        try:
+            yield stage
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+
+
+def _publish(src: str, path: str, schema, batch_id: int | None) -> None:
+    """The one way files enter a live table: rename the part files
+    staged under ``src`` (laid out in the table's own partition
+    layout; a missing ``src`` publishes nothing) into the table root
+    ``path``. The caller holds the table's shared write lock
+    (:func:`_staging`). Four steps, in order:
+
+    1. merge ``schema`` into the sidecar — a :class:`SchemaConflict`
+       raises here, before anything is visible, and the sidecar exists
+       BEFORE the root dir: ``load_tables`` only lists dirs, so the
+       instant a reader can discover the table its registered schema
+       is on disk (a dir-without-sidecar gap reads as
+       UNABLE_TO_INFER_SCHEMA, wire-soak-found r13);
+    2. create the root in snapshot layout (:func:`_ensure_snapshot_root`);
+    3. with ``batch_id``, wipe every existing ``batch_id=N`` leaf:
+       replaying a crashed micro-batch first clears what its earlier
+       attempt landed — including leaves for keys the replay no
+       longer produces, even when it produces no rows at all;
+    4. rename each staged part file into place.
+
+    r14: steps 3–4 replaced Spark's ``partitionOverwriteMode=dynamic``
+    writer, which stages to ``_temporary`` and then walks/moves
+    partition DIRS driver-side — measured 2–4× slower per micro-batch
+    at the ingest benchmark's file sizes. Replay convergence is also
+    strictly stronger: dynamic overwrite only replaces partitions
+    present in the NEW attempt."""
+    _merge_registered_schema(path, schema)
+    _ensure_snapshot_root(path)
+    if batch_id is not None:
+        leaf = f"batch_id={int(batch_id)}"
+        for dirpath, dirnames, _files in os.walk(path):
+            if leaf in dirnames:
+                shutil.rmtree(os.path.join(dirpath, leaf), ignore_errors=True)
+            # batch_id is the innermost partition level: never descend
             dirnames[:] = [
-                d for d in dirnames if not d.startswith(("_", "."))
+                d for d in dirnames if not d.startswith("batch_id=")
             ]
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                rel = os.path.relpath(
-                    os.path.join(dirpath, f), stage
-                )
-                dst = os.path.join(path, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(os.path.join(dirpath, f), dst)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    for dirpath, dirnames, files in os.walk(src):
+        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
+        for f in files:
+            if f.startswith(("_", ".")):
+                continue
+            rel = os.path.relpath(os.path.join(dirpath, f), src)
+            dst = os.path.join(path, rel)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.rename(os.path.join(dirpath, f), dst)
 
 
 def route_residential(
@@ -527,79 +540,14 @@ def route_residential(
 
     ONE Spark write job covers BOTH routes (r14): the parse is staged
     once, partitioned by ``is_qc`` ABOVE each table's own layout, and
-    the two subtrees are renamed into raw_data / qc_data under their
-    write locks — the earlier two filtered appends paid two full
-    write jobs per ingest pass, the dominant term of the per-file
-    ingest constant the bench sat on for four rounds. Route counts
-    come from the per-file manifest aggregate, so the points scan
-    runs exactly once (inside the write).
-    """
-    manifest = manifest.cache()
-    try:
-        # counts fall out of the write itself (df.observe metrics on
-        # the staged write job) — no separate count job; the whole
-        # pass is now 3 Spark jobs: points write, manifests write,
-        # moves (was 6 at r13)
-        counts = _route_points_combined(points, table_dir, batch_id)
-        _append_manifests_combined(
-            manifest, table_dir, batch_id,
-            include_ingest=batch_id is not None,
-        )
-        return counts
-    finally:
-        manifest.unpersist()
-
-
-def _publish_stage_subtree(
-    src_root: str,
-    path: str,
-    table_schema,
-    batch_id: int | None,
-    n_parts: int,
-) -> None:
-    """Rename one staged subtree into a live table root under its
-    write lock: sidecar-before-root, snapshot layout from birth, the
-    idempotent ``batch_id=N`` leaf wipe, then per-file renames — the
-    same publication contract as :func:`_staged_append`."""
-    import glob as _glob
-
-    with table_write_lock(
-        os.path.dirname(path), os.path.basename(path)
-    ):
-        _merge_registered_schema(path, table_schema)
-        _ensure_snapshot_root(path)
-        if batch_id is not None:
-            pat = os.path.join(
-                path, *(["*"] * n_parts), f"batch_id={int(batch_id)}"
-            )
-            for leaf in _glob.glob(pat):
-                shutil.rmtree(leaf, ignore_errors=True)
-        for dirpath, dirnames, files in os.walk(src_root):
-            dirnames[:] = [
-                d for d in dirnames if not d.startswith(("_", "."))
-            ]
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                rel = os.path.relpath(os.path.join(dirpath, f), src_root)
-                dst = os.path.join(path, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(os.path.join(dirpath, f), dst)
-
-
-def _route_points_combined(
-    points: DataFrame, table_dir: str, batch_id: int | None
-) -> dict[str, int]:
-    """Stage BOTH routes in one write job (``is_qc`` as the outermost
-    stage-only partition level), then rename each subtree into its
-    table under that table's write lock. Produces bit-identical table
-    contents to two separate ``append_points`` calls: the registered
-    schema, partition layout, and replay wipe are the same — only the
-    number of Spark jobs changes (2 → 1). Returns per-target row
-    counts, observed on the write job itself (``df.observe``) so no
-    separate count job runs."""
-    import uuid
-
+    each subtree is published into raw_data / qc_data — the earlier
+    two filtered appends paid two full write jobs per ingest pass.
+    Table contents are those of two ``append_points`` calls. Route
+    counts are observed on the write job itself (``df.observe``), so
+    the whole pass is 3 Spark jobs: points write, manifests write,
+    moves. A route with no rows is published only into a table that
+    already exists — a replay must still wipe its ``batch_id=N``
+    leaves there, but it creates no empty table."""
     from pyspark.sql import Observation
 
     out = points.drop("src_file").withColumn("date", F.to_date("time"))
@@ -613,112 +561,69 @@ def _route_points_combined(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("is_qc").cast("long")).alias("qc"),
     )
-    stage = os.path.join(table_dir, f".route-{uuid.uuid4().hex[:12]}")
+    schema = out.drop("is_qc").schema
+    manifest = manifest.cache()
     try:
-        out.write.mode("append").partitionBy("is_qc", *parts).parquet(stage)
-        metrics = obs.get
-        qc = int(metrics["qc"] or 0)
-        counts = {"raw_data": int(metrics["n"]) - qc, "qc_data": qc}
-        table_schema = out.drop("is_qc").schema
-        for table, flag in (("raw_data", False), ("qc_data", True)):
-            src_root = os.path.join(stage, f"is_qc={str(flag).lower()}")
-            path = os.path.join(table_dir, table)
-            n_parts = len(parts) - (1 if batch_id is not None else 0)
-            if os.path.isdir(src_root):
-                _publish_stage_subtree(
-                    src_root, path, table_schema, batch_id, n_parts
-                )
-            elif batch_id is not None and os.path.lexists(path):
-                # zero rows for this route this batch: a replay must
-                # still wipe the crashed attempt's batch_id=N leaves
-                # or they survive as stale rows, contradicting
-                # _staged_append's convergence contract (mirrors
-                # _append_manifests_combined's empty-case wipe;
-                # advisor r14)
-                import glob as _glob
-
-                with table_write_lock(table_dir, table):
-                    pat = os.path.join(
-                        path,
-                        *(["*"] * n_parts),
-                        f"batch_id={int(batch_id)}",
-                    )
-                    for leaf in _glob.glob(pat):
-                        shutil.rmtree(leaf, ignore_errors=True)
-        return counts
+        with _staging(table_dir, ["raw_data", "qc_data"]) as stage:
+            out.write.mode("append").partitionBy(
+                "is_qc", *parts
+            ).parquet(stage)
+            for table, flag in (("raw_data", "false"), ("qc_data", "true")):
+                src = os.path.join(stage, f"is_qc={flag}")
+                path = os.path.join(table_dir, table)
+                if os.path.isdir(src) or os.path.lexists(path):
+                    _publish(src, path, schema, batch_id)
+        _append_manifests(
+            manifest, table_dir, batch_id, include_ingest=batch_id is not None
+        )
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        manifest.unpersist()
+    metrics = obs.get
+    qc = int(metrics["qc"] or 0)
+    return {"raw_data": int(metrics["n"]) - qc, "qc_data": qc}
 
 
-def _append_manifests_combined(
+def _append_manifests(
     manifest: DataFrame,
     table_dir: str,
     batch_id: int | None,
     include_ingest: bool,
 ) -> None:
-    """quarantine_files (+ ingest_manifest when streaming) in ONE
-    staged write: the two tables share a schema and a source frame,
-    so a stage-only ``_mtable`` partition level splits them — one
-    Spark job instead of two per ingest pass."""
-    import uuid
+    """quarantine_files (+ ingest_manifest) in ONE staged write: the
+    two tables share a schema and a source frame, so a stage-only
+    ``_mtable`` partition level splits them — one Spark job instead
+    of two per ingest pass. Both tables are always published, so each
+    exists (with its schema sidecar) even when it got no rows.
 
+    ingest_manifest records EVERY file of a committed-or-in-flight
+    batch with its routing decision. This is what makes archive and
+    quarantine moves safe to defer until after the streaming pass
+    commits: ``apply_pending_moves`` needs only this table, never the
+    live query."""
     rows = manifest.select("src_file", "quarantine_reason")
-    quar = rows.where(F.col("quarantine_reason").isNotNull()).withColumn(
+    frames = rows.where(F.col("quarantine_reason").isNotNull()).withColumn(
         "_mtable", F.lit("quarantine_files")
     )
-    frames = quar
+    tables = ["quarantine_files"]
     if include_ingest:
-        frames = quar.unionByName(
+        frames = frames.unionByName(
             rows.withColumn("_mtable", F.lit("ingest_manifest"))
         )
+        tables.append("ingest_manifest")
     parts: list[str] = []
     if batch_id is not None:
         frames = frames.withColumn("batch_id", F.lit(int(batch_id)))
         parts = ["batch_id"]
-    stage = os.path.join(table_dir, f".manifests-{uuid.uuid4().hex[:12]}")
-    try:
+    schema = frames.drop("_mtable").schema
+    with _staging(table_dir, tables) as stage:
         frames.write.mode("append").partitionBy(
             "_mtable", *parts
         ).parquet(stage)
-        table_schema = frames.drop("_mtable").schema
-        targets = ["quarantine_files"] + (
-            ["ingest_manifest"] if include_ingest else []
-        )
-        for table in targets:
-            src_root = os.path.join(stage, f"_mtable={table}")
-            path = os.path.join(table_dir, table)
-            if os.path.isdir(src_root):
-                _publish_stage_subtree(
-                    src_root, path, table_schema, batch_id, 0
-                )
-            else:
-                # zero rows for this table this batch: still ensure
-                # the table exists (and wipe this batch's leaf on
-                # replay) so consumers and replays see it consistently
-                with table_write_lock(table_dir, table):
-                    _merge_registered_schema(path, table_schema)
-                    _ensure_snapshot_root(path)
-                    if batch_id is not None:
-                        leaf = os.path.join(
-                            path, f"batch_id={int(batch_id)}"
-                        )
-                        shutil.rmtree(leaf, ignore_errors=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-def _write_manifest(
-    rows: DataFrame, path: str, batch_id: int | None
-) -> None:
-    with table_write_lock(os.path.dirname(path), os.path.basename(path)):
-        _ensure_snapshot_root(path)
-        if batch_id is None:
-            _staged_append(rows, path, [], None)
-        else:
-            _staged_append(
-                rows.withColumn("batch_id", F.lit(int(batch_id))),
-                path,
-                ["batch_id"],
+        for table in tables:
+            _publish(
+                os.path.join(stage, f"_mtable={table}"),
+                os.path.join(table_dir, table),
+                schema,
                 batch_id,
             )
 
@@ -727,22 +632,7 @@ def append_quarantine_manifest(
     manifest: DataFrame, table_dir: str, batch_id: int | None = None
 ) -> None:
     """S12 — record quarantined files + reasons as a table."""
-    bad = manifest.where(F.col("quarantine_reason").isNotNull()).select(
-        "src_file", "quarantine_reason"
-    )
-    _write_manifest(bad, os.path.join(table_dir, "quarantine_files"), batch_id)
-
-
-def append_ingest_manifest(
-    manifest: DataFrame, table_dir: str, batch_id: int
-) -> None:
-    """Record EVERY file of a committed-or-in-flight batch with its
-    routing decision. This is what makes archive/quarantine moves safe
-    to defer until after the streaming pass commits: the moves job
-    (``apply_pending_moves``) needs only this table, never the live
-    query. Overwrite-by-batch, so replay converges."""
-    rows = manifest.select("src_file", "quarantine_reason")
-    _write_manifest(rows, os.path.join(table_dir, "ingest_manifest"), batch_id)
+    _append_manifests(manifest, table_dir, batch_id, include_ingest=False)
 
 
 def _move_one(
@@ -1079,8 +969,8 @@ def compact_table(
       flock dies with its holder, so a crashed compactor leaves no
       stale lock (and its tmp/version debris heals via
       ``recover_compaction`` on the next run).
-    * writer vs compactor — cooperative mutators (``append_points``,
-      ``_write_manifest``, ``retention_delete``) hold the table's
+    * writer vs compactor — cooperative mutators (every staged append
+      — see ``_staging`` — and ``retention_delete``) hold the table's
       ``.write.lock`` SHARED across each operation; the compactor
       takes it EXCLUSIVELY only around the two cheap instants: the
       initial file-set capture and the validate+swap. Appends never
@@ -1118,8 +1008,9 @@ def _compact_locked(
         # commits, which the pre-swap re-capture detects
         before = _visible_file_set(root)
         # safe point to sweep crashed-append staging debris: a live
-        # append holds the shared write lock while staging, so under
-        # the exclusive lock every surviving .append-* dir is orphaned
+        # writer holds the shared write lock of every table it stages
+        # for (_staging), so under the exclusive lock every surviving
+        # .append-* dir is orphaned
         for stale in glob.glob(root + ".append-*"):
             shutil.rmtree(stale, ignore_errors=True)
     parts = list(PARTITIONING.get(table, []))

@@ -18,12 +18,12 @@ Delivery semantics (stated precisely — foreachBatch itself is
 at-least-once):
 
 * TABLE CONTENTS are exactly-once under crash/replay. Every in-batch
-  write is an idempotent dynamic partition overwrite of that batch's
-  own ``batch_id=N`` partitions (sources/sinks.py module docstring),
-  so a batch replayed after a crash between the table write and the
-  checkpoint commit rewrites the same partitions instead of appending
-  duplicates. The reference double-ingests in this exact window
-  (``loader.py:68-84``).
+  write lands in that batch's own ``batch_id=N`` leaf partitions, and
+  publishing it first wipes every existing leaf of the batch
+  (sources/sinks.py module docstring), so a batch replayed after a
+  crash between the table write and the checkpoint commit replaces
+  what its first attempt wrote instead of appending duplicates. The
+  reference double-ingests in this exact window (``loader.py:68-84``).
 * FILE MOVES (archive/quarantine) are at-least-once and strictly
   post-commit: batches record routing in the ``ingest_manifest``
   table, and ``run_ingest_pass`` replays pending moves only after the

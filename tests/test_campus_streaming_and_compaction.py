@@ -48,6 +48,50 @@ def test_campus_streaming_and_compaction(spark, tmp_path):
     assert flow2.count() == 2  # same data, fewer files
 
 
+def test_clean_passes_keep_query_working(spark, tmp_path):
+    """A campus pass and a line-protocol pass that quarantine nothing
+    still register ``quarantine_files`` with its schema: /query keeps
+    answering, and the table reads as empty instead of as a schemaless
+    dir that fails every registry load."""
+    from ciws_server_spark.sources import sinks
+    from ciws_server_spark.sources.http_api import InfluxHTTPApi
+    from ciws_server_spark.streaming.ingest import (
+        run_campus_pass,
+        run_line_protocol_pass,
+    )
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    table_dir = str(tmp_path / "tables")
+    ckpt = str(tmp_path / "ckpt")
+    api = InfluxHTTPApi(spark, table_dir)
+
+    def count(field, measurement):
+        status, body = api.handle_query(
+            {"q": f"SELECT count({field}) FROM {measurement}"}
+        )
+        assert status == 200, body
+        (res,) = body["results"]
+        assert "error" not in res, res
+        assert res["series"][0]["columns"] == [f"count_{field}"]
+        return res["series"][0]["values"][0][0]
+
+    (landing / "a.csv").write_text(CSV_A)
+    run_campus_pass(spark, str(landing), table_dir, ckpt, building="e")
+    assert count("coldInFlowRate", "campus_flow") == 1
+    (landing / "b.lp").write_text(
+        "lp_flow,buildingID=E v=0.5 1614643201000000000\n"
+        "lp_flow,buildingID=E v=0.7 1614643202000000000\n"
+    )
+    run_line_protocol_pass(
+        spark, str(landing), table_dir, ckpt, {"lp_flow": {"v": "float"}}
+    )
+    assert count("v", "lp_flow") == 2
+    assert count("coldInFlowRate", "campus_flow") == 1
+    tables = sinks.load_tables(spark, table_dir)
+    assert tables["quarantine_files"].count() == 0
+
+
 def test_compaction_crash_recovery(spark, tmp_path):
     """A crash between the two swap renames used to strand the table
     in <table>.compact.old with nothing at the table path; the

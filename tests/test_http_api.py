@@ -525,11 +525,16 @@ def test_query_request_cases_agree_across_modes(
 def test_query_statement_results_agree_across_modes(api):
     """One read-only multi-statement request gives the same values and
     in-body errors per statement_id in both modes: a good SELECT (two
-    one-row chunks), an unknown measurement (InfluxQLError) and a plan
-    Spark cannot analyze (AnalysisException)."""
+    one-row chunks), an unknown measurement (InfluxQLError), a plan
+    Spark cannot analyze (AnalysisException) and a plan that fails
+    while it runs (ANSI cast of a string tag to a number; one building,
+    so the failing value is the same in both modes) — the last one
+    mid-stream in chunked mode."""
     params = {
         "q": "SELECT flowRate FROM campus_flow ORDER BY time; "
-             "SELECT v FROM nope; SELECT date + 1 FROM campus_flow",
+             "SELECT v FROM nope; SELECT date + 1 FROM campus_flow; "
+             "SELECT flowRate + buildingID FROM campus_flow"
+             " WHERE buildingID = 'B'",
         "chunk_size": "1",
     }
     got = {}
@@ -547,6 +552,54 @@ def test_query_statement_results_agree_across_modes(api):
         "values": [], "error": "unknown measurement: 'nope'"
     }
     assert got[False][2]["error"].startswith("invalid statement: ")
+    assert got[False][3]["values"] == []
+    assert got[False][3]["error"].startswith("[CAST_INVALID_INPUT] ")
+
+
+CONTENTION_CASES = [
+    # a table dir with no sidecar and no files: every registry load
+    # fails with UNABLE_TO_INFER_SCHEMA, a snapshot-race marker, while
+    # no table version moves — a permanent error, not contention
+    ("marker_but_storage_still", False,
+     "invalid statement: [UNABLE_TO_INFER_SCHEMA] "),
+    ("race_while_storage_moved", True, "storage contention persisted: "),
+]
+
+
+@pytest.mark.parametrize(
+    "moved,prefix",
+    [c[1:] for c in CONTENTION_CASES],
+    ids=[c[0] for c in CONTENTION_CASES],
+)
+def test_contention_label_needs_storage_movement(
+    api, monkeypatch, moved, prefix
+):
+    """Both modes label a statement error as storage contention only
+    when the retry layer saw storage move on every attempt; an error
+    whose text merely resembles a snapshot race is reported as what
+    it is."""
+    from ciws_server_spark.sources import http_api
+
+    if moved:
+        ticks = iter(range(1_000))
+        monkeypatch.setattr(
+            http_api, "_snapshot_fingerprint", lambda _td: next(ticks)
+        )
+
+        def race(*_a, **_k):
+            raise FileNotFoundError("No such file or directory: 'part-0'")
+
+        monkeypatch.setattr(http_api, "run_influxql", race)
+    else:
+        os.makedirs(os.path.join(api.table_dir, "ghost"))
+    for chunked in (False, True):
+        status, body = _query(
+            api, {"q": "SELECT flowRate FROM campus_flow"}, chunked
+        )
+        assert status == 200, body
+        (res,) = body["results"]
+        assert res["statement_id"] == 0 and "series" not in res
+        assert res["error"].startswith(prefix), (chunked, res)
 
 
 def test_write_authorizes_against_registered_database(api, spark):

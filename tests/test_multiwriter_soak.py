@@ -32,6 +32,8 @@ import os
 import threading
 import time
 
+import pytest
+
 from ciws_server_spark.sources import sinks
 
 T0 = dt.datetime(2024, 3, 1)
@@ -247,3 +249,54 @@ def test_crashed_append_staging_swept_by_compactor(spark, tmp_path):
     assert not os.path.exists(debris)
     # and the live table is intact
     assert sinks.read_table(spark, td, "campus_flow").count() == 1
+
+    # the ingest route's two write jobs (points → raw_data/qc_data,
+    # manifests → quarantine_files/ingest_manifest) stage by the same
+    # rule: a writer that dies after its stage write — nothing
+    # published, no cleanup — leaves a stage the compactor of one of
+    # its target tables sweeps
+    points = spark.createDataFrame(
+        [(T0, "s1", 1.0, False, "f1"), (T0, "s1", 2.0, True, "f1")],
+        "time timestamp, siteID string, v double, is_qc boolean,"
+        " src_file string",
+    )
+    manifest = spark.createDataFrame(
+        [("f1", None), ("f2", "bad header")],
+        "src_file string, quarantine_reason string",
+    )
+    sinks.route_residential(points, manifest, td, batch_id=3)
+    tables = ("raw_data", "qc_data", "quarantine_files", "ingest_manifest")
+    rows = {t: sinks.read_table(spark, td, t).count() for t in tables}
+    real_merge, real_shutil = sinks._merge_registered_schema, sinks.shutil
+    for targets in (tables[:2], tables[2:]):
+        crashed = []
+
+        def merge_or_die(root, schema):
+            if os.path.basename(root) == targets[0]:
+                crashed.append(root)
+                raise RuntimeError("injected crash before publish")
+            return real_merge(root, schema)
+
+        def rmtree(path, *a, **k):
+            if not crashed:  # a dead writer cleans nothing up
+                real_shutil.rmtree(path, *a, **k)
+
+        before = set(os.listdir(td))
+        sinks._merge_registered_schema = merge_or_die
+        sinks.shutil = type("DeadWriter", (), {"rmtree": rmtree})
+        try:
+            with pytest.raises(RuntimeError, match="injected crash"):
+                sinks.route_residential(points, manifest, td, batch_id=3)
+        finally:
+            sinks._merge_registered_schema = real_merge
+            sinks.shutil = real_shutil
+        (stage,) = set(os.listdir(td)) - before
+        stage = os.path.join(td, stage)
+        assert glob.glob(os.path.join(stage, "**", "*.parquet"),
+                         recursive=True)
+        table, sep, _ = os.path.basename(stage).partition(".append-")
+        assert sep and table in targets, stage
+        sinks.compact_table(spark, td, table)
+        assert not os.path.exists(stage)
+        assert rows == {t: sinks.read_table(spark, td, t).count()
+                        for t in tables}

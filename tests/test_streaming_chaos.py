@@ -78,15 +78,15 @@ def test_cron_crash_cron_across_all_three_surfaces(spark, tmp_path):
     # r14: the residential pass stages both routes in ONE write job
     # and publishes each table's subtree in turn — the equivalent
     # mid-batch crash window is now between the raw_data and qc_data
-    # subtree publishes (sinks._publish_stage_subtree)
-    real_publish = sinks._publish_stage_subtree
+    # subtree publishes (sinks._publish)
+    real_publish = sinks._publish
 
     def publish_then_die(src_root, path, *a, **k):
         if path.endswith("qc_data"):  # raw_data landed; die before qc
             raise RuntimeError("injected mid-batch kill (ingest)")
         return real_publish(src_root, path, *a, **k)
 
-    sinks._publish_stage_subtree = publish_then_die
+    sinks._publish = publish_then_die
     try:
         with pytest.raises(Exception, match="injected mid-batch kill"):
             run_ingest_pass(
@@ -94,7 +94,7 @@ def test_cron_crash_cron_across_all_three_surfaces(spark, tmp_path):
                 archive_dir=archive, quarantine_dir=quarantine,
             )
     finally:
-        sinks._publish_stage_subtree = real_publish
+        sinks._publish = real_publish
 
     # half-applied: raw written, qc missing, no moves, files untouched
     assert _counts(spark, table_dir) == {"raw_data": 2, "qc_data": 0}
