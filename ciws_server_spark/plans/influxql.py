@@ -593,7 +593,10 @@ def _where_expr(
     """Recursive descent over OR → AND → atom, with parentheses.
 
     Time-range atoms additionally record lo/hi bounds in ``bounds``
-    (consumed by fill() to generate the dense bucket axis).
+    (consumed by fill() to generate the dense bucket axis), and the
+    atoms every row must satisfy — those under AND only — as
+    ``(op, literal as SQL)`` pairs in ``bounds["ranges"]`` (consumed by
+    date-partition pruning, :func:`_date_bounds`).
 
     ``columns`` — when given, an identifier NOT in the measurement's
     schema evaluates as NULL (the comparison matches no rows) instead
@@ -607,9 +610,13 @@ def _where_expr(
     expr = expr.strip()
     ors = _split_top(expr, "OR")
     if len(ors) > 1:
+        kept = len(bounds.get("ranges", ()))
         col = _where_expr(ors[0], time_col, bounds, tz, columns)
         for part in ors[1:]:
             col = col | _where_expr(part, time_col, bounds, tz, columns)
+        if "ranges" in bounds:
+            # a time range under OR bounds no row on its own
+            del bounds["ranges"][kept:]
         return col
     ands = _split_top(expr, "AND")
     if len(ands) > 1:
@@ -718,9 +725,13 @@ def _where_expr(
         # divergence, fixed r11)
         is_epoch = em is not None
         has_zone = bool(re.search(r"(?:Z|[+-]\d{2}:\d{2})$", rhs))
-        val = F.lit(rhs).cast("timestamp")
+        # SQL text, which date pruning reuses: one Column call instead
+        # of three. The validated literal holds no quote, nor does a
+        # zone name ZoneInfo found.
+        val_sql = f"CAST('{rhs}' AS TIMESTAMP)"
         if tz and not is_epoch and not has_zone:
-            val = F.to_utc_timestamp(val, tz)
+            val_sql = f"to_utc_timestamp({val_sql}, '{tz}')"
+        val = F.expr(val_sql)
     else:
         # type-aware literal: ANSI mode makes a mismatched comparison
         # (double field vs 'true', numeric field vs a word) a
@@ -756,6 +767,7 @@ def _where_expr(
             bounds["lo"] = min(bounds.get("lo", b), b)
         else:
             bounds["hi"] = max(bounds.get("hi", b), b)
+        bounds.setdefault("ranges", []).append((op, val_sql))
     if op == "=":
         return col == val
     if op in ("!=", "<>"):
@@ -2306,6 +2318,70 @@ def _null_fill_unknown_identifiers(
     return df
 
 
+def _date_bounds(df: DataFrame, ranges: list):
+    """The ``date`` bounds that the conjunctive time ranges of a WHERE
+    imply, as one Column, when ``df`` is a scan of a store table whose
+    ``date`` partition is ``to_date(time)``
+    (:func:`sinks.date_is_day_of_time`); None for any other frame — a
+    derived one, or a ``/write`` measurement that may carry its own
+    ``date`` field. Spark cannot infer a partition bound from a bound
+    on ``time``, so without these a one-day panel selects every
+    day-file of its building and skips their rows by row-group
+    statistics. Each day is taken by ``to_date`` of the WHERE's own
+    literal, in the session time zone the writers took
+    ``to_date(time)`` in."""
+    from ..sources import sinks
+
+    dtypes = dict(df.dtypes)
+    if dtypes.get("time") != "timestamp" or dtypes.get("date") != "date":
+        return None
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or not rel.partitionSchema().getFieldIndex("date").isDefined()
+    ):
+        return None
+    if not sinks.date_is_day_of_time(
+        rel.location().rootPaths().head().getName()
+    ):
+        return None
+    # one SQL expression: every Column call costs the driver several
+    # py4j round trips
+    return F.expr(
+        " AND ".join(
+            f"`date` >= to_date({lit})" if op in (">=", ">")
+            else f"`date` <= to_date({lit})" if op == "<="
+            # the last instant a row may hold is one microsecond before
+            else f"`date` <= to_date({lit} - INTERVAL 1 MICROSECOND)"
+            for op, lit in ranges
+        )
+    )
+
+
+def _one_partition_if_small(out: DataFrame) -> DataFrame:
+    """``out`` read as one partition when every leaf of its plan is a
+    file scan and the files those scans select (after partition
+    pruning) total at most ``spark.sql.files.openCostInBytes``; else
+    ``out`` unchanged. The probe is one synchronous planning of
+    ``out``; the coalesce sits above the filter, so pushdown and
+    pruning still happen below it."""
+    jqe = out._jdf.queryExecution()
+    leaves = jqe.sparkPlan().collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "FileSourceScanExec":
+            return out
+        total += leaf.selectedPartitions().totalFileSize()
+    conf = jqe.sparkSession().sessionState().conf()
+    if total > conf.filesOpenCostInBytes():
+        return out
+    return out.coalesce(1)
+
+
 def translate(
     df: DataFrame, query: str, time_col: str = "time", now=None
 ) -> DataFrame:
@@ -2314,7 +2390,33 @@ def translate(
     ``df`` is the measurement's DataFrame (the FROM name is validated
     but binding is the caller's job — pass ``tables[name]``); returns
     the translated DataFrame plan.
+
+    Small statements plan as one partition. Once the WHERE filter is
+    on (with its time range also pruning ``date`` partitions, see
+    :func:`_date_bounds`), Spark is asked what the file scans select;
+    when every leaf is a file scan and the selected files total at
+    most ``spark.sql.files.openCostInBytes`` — Spark's own cost of
+    opening one file, 4 MB by default — the filtered frame is read
+    as one partition (:func:`_one_partition_if_small`). A one-day
+    panel then runs as one Spark job with a local sort, instead of a
+    hash Exchange, a range-sort sampling job and the AQE stages around
+    them. The gate is the open cost, not
+    ``spark.sql.files.maxPartitionBytes`` (128 MB): a fleet-wide
+    ``last()`` over 22 MB read as one partition took twice as long as
+    its parallel scan. Any other input — a larger one, an in-memory
+    frame, a Python data source, the measurements of a ``FROM /re/``
+    or ``FROM a, b`` statement — plans as before.
     """
+    return _translate(df, query, time_col, now, fan_out=False)
+
+
+def _translate(
+    df: DataFrame, query: str, time_col: str, now, *, fan_out: bool
+) -> DataFrame:
+    """:func:`translate`. ``fan_out`` marks one measurement of a
+    multi-measurement statement: its frame keeps its partitioning,
+    because each measurement passing the one-partition gate does not
+    make their union pass it."""
     query = _resolve_now(query, now)
     m = _QUERY_RE.match(query)
     if not m:
@@ -2337,12 +2439,17 @@ def translate(
     # WHERE --------------------------------------------------------
     time_bounds: dict = {}
     if m.group("where"):
-        out = out.where(
-            _where_expr(
-                m.group("where"), time_col, time_bounds, tz,
-                columns=dict(df.dtypes),
-            )
+        cond = _where_expr(
+            m.group("where"), time_col, time_bounds, tz,
+            columns=dict(df.dtypes),
         )
+        if time_col == "time" and time_bounds.get("ranges"):
+            days = _date_bounds(df, time_bounds["ranges"])
+            if days is not None:
+                cond = cond & days
+        out = out.where(cond)
+    if not fan_out:
+        out = _one_partition_if_small(out)
 
     # GROUP BY -----------------------------------------------------
     group_cols = []
@@ -3971,8 +4078,9 @@ def _multi_measurement(
             if fname not in have:
                 frame = frame.withColumn(fname, F.lit(None).cast(ftype))
         frames.append(
-            translate(
-                frame, f"{query[:s]}{n}{query[e:]}", time_col=time_col
+            _translate(
+                frame, f"{query[:s]}{n}{query[e:]}", time_col, None,
+                fan_out=True,
             ).select(F.lit(n).alias("measurement"), "*")
         )
     return reduce(

@@ -667,13 +667,13 @@ class InfluxHTTPApi:
                         max_rows=self.max_row_limit,
                         order_desc=statement_order_desc(stmt),
                     ), None
-                # the TABLES dict is returned alongside: the reader
-                # leases (sinks._lease_version) weakref the exact
-                # DataFrames _read_current returned, and a derived
-                # result frame holds no Python reference to them —
-                # keeping the dict alive in this generator frame keeps
-                # the pinned snapshot leased while toLocalIterator
-                # drains
+                # the table registry is returned alongside: the
+                # reader leases (sinks._lease_version) weakref the
+                # exact DataFrames _read_current returned, which the
+                # registry caches, and a derived result frame holds no
+                # Python reference to them — keeping the registry
+                # alive in this generator frame keeps the pinned
+                # snapshot leased while toLocalIterator drains
                 return res, tables
 
             try:

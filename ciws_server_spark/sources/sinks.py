@@ -43,8 +43,10 @@ import sys
 import threading
 import time
 import weakref
+from collections.abc import Mapping
 from contextlib import ExitStack, contextmanager
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -142,6 +144,15 @@ PARTITIONING = {
     "quarantine_files": [],
     "ingest_manifest": [],
 }
+
+
+def date_is_day_of_time(scan_root: str) -> bool:
+    """Whether the table read from ``scan_root`` — its pinned
+    ``<table>.vNNNNNN`` version dir, or a legacy table dir — carries
+    the ``date`` partition every writer here derives as
+    ``to_date(time)``, so that a time range may prune it."""
+    table = re.sub(r"\.v\d+$", "", os.path.basename(scan_root))
+    return "date" in PARTITIONING.get(table, ())
 
 
 class InvalidTableName(ValueError):
@@ -337,37 +348,92 @@ def read_table(spark, table_dir: str, table: str) -> DataFrame:
     return _read_current(spark, os.path.join(table_dir, table))
 
 
-def load_tables(spark, table_dir: str) -> dict[str, DataFrame]:
+class TableRegistry(Mapping):
+    """The measurement registry :func:`load_tables` returns: its keys
+    are fixed by one listing of the store, and each table is read
+    (:func:`read_table`) on its first lookup, then cached.
+
+    A statement names one or two measurements, so a registry that read
+    every table up front paid one file-index build per table per
+    statement — on a store that keeps ingesting, a distributed listing
+    job over ``raw_data`` for every panel read of ``campus_flow``.
+    Listing and iteration read nothing. A cached frame keeps its
+    reader lease (``_lease_version``) for as long as the registry
+    holds it.
+
+    A table dropped after the listing is not in the registry (r14
+    soak-found via the CQ scheduler: engine callers have no retry
+    wrapper). ``in`` answers by looking the table up, and a lookup
+    that finds the table's path gone forgets the name and re-raises
+    Spark's ``PATH_NOT_FOUND`` — never a KeyError — which the wire
+    front door retries as a snapshot race."""
+
+    def __init__(self, spark, table_dir: str, names: list[str]):
+        self._spark, self._table_dir = spark, table_dir
+        self._names = names
+        self._frames: dict[str, DataFrame] = {}
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if name not in self._frames:
+            if name not in self._names:
+                raise KeyError(name)
+            try:
+                self._frames[name] = read_table(
+                    self._spark, self._table_dir, name
+                )
+            except AnalysisException as exc:
+                if _path_gone(exc):
+                    self._names.remove(name)
+                raise
+        return self._frames[name]
+
+    def __contains__(self, name) -> bool:
+        try:
+            self[name]
+        except KeyError:
+            return False
+        except AnalysisException as exc:
+            if _path_gone(exc):
+                return False
+            raise
+        return True
+
+    def __iter__(self):
+        # a copy: a lookup during iteration may forget a dropped name
+        return iter(list(self._names))
+
+    def __len__(self) -> int:
+        return len(self._names)
+
+
+def _path_gone(exc: Exception) -> bool:
+    return "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc)
+
+
+def load_tables(spark, table_dir: str) -> TableRegistry:
     """The measurement registry an InfluxQL front-end call wants:
     every live table under ``table_dir``, each read under its full
-    evolved schema (:func:`read_table`). Skips version dirs, sidecars,
-    and rewrite debris — only table roots (dirs or snapshot symlinks
-    whose name carries no dot-suffix) qualify."""
-    from pyspark.errors import AnalysisException
+    evolved schema (:func:`read_table`) when first looked up (see
+    :class:`TableRegistry`). Skips version dirs, sidecars, and rewrite
+    debris — only table roots (dirs or snapshot symlinks whose name
+    carries no dot-suffix) qualify.
 
-    out: dict[str, DataFrame] = {}
-    for entry in sorted(os.listdir(table_dir)):
-        if "." in entry or entry.startswith("_"):
-            continue  # locks, sidecars, root.vNNNNNN, *.tmp debris
-        root = os.path.join(table_dir, entry)
-        if not os.path.isdir(root):  # follows the snapshot symlink
-            continue
-        try:
-            out[entry] = read_table(spark, table_dir, entry)
-        except AnalysisException as exc:
-            # a concurrent DROP can yank the table between the
-            # listdir above and the eager file-index build here
-            # (r14 soak-found via the CQ scheduler's load_tables —
-            # unlike the wire path, engine callers have no retry
-            # wrapper). A table mid-drop simply isn't part of this
-            # registry snapshot.
-            if (
-                "PATH_NOT_FOUND" in str(exc)
-                or "Path does not exist" in str(exc)
-            ):
-                continue
-            raise
-    return out
+    Reading only the tables a statement names is half of the
+    small-statement path; the other half is ``influxql.translate``
+    planning a scan whose pruned files fit in one
+    ``spark.sql.files.openCostInBytes`` as one partition — the open
+    cost, not ``maxPartitionBytes``, because a fleet-wide scan well
+    under 128 MB still runs twice as fast in parallel."""
+    names = [
+        entry
+        for entry in sorted(os.listdir(table_dir))
+        # locks, sidecars, root.vNNNNNN, *.tmp debris; isdir follows
+        # the snapshot symlink
+        if "." not in entry
+        and not entry.startswith("_")
+        and os.path.isdir(os.path.join(table_dir, entry))
+    ]
+    return TableRegistry(spark, table_dir, names)
 
 
 def _ensure_snapshot_root(path: str) -> None:

@@ -557,9 +557,9 @@ def test_query_statement_results_agree_across_modes(api):
 
 
 CONTENTION_CASES = [
-    # a table dir with no sidecar and no files: every registry load
-    # fails with UNABLE_TO_INFER_SCHEMA, a snapshot-race marker, while
-    # no table version moves — a permanent error, not contention
+    # a table dir with no sidecar and no files: reading it fails with
+    # UNABLE_TO_INFER_SCHEMA, a snapshot-race marker, while no table
+    # version moves — a permanent error, not contention
     ("marker_but_storage_still", False,
      "invalid statement: [UNABLE_TO_INFER_SCHEMA] "),
     ("race_while_storage_moved", True, "storage contention persisted: "),
@@ -594,7 +594,7 @@ def test_contention_label_needs_storage_movement(
         os.makedirs(os.path.join(api.table_dir, "ghost"))
     for chunked in (False, True):
         status, body = _query(
-            api, {"q": "SELECT flowRate FROM campus_flow"}, chunked
+            api, {"q": "SELECT flowRate FROM ghost"}, chunked
         )
         assert status == 200, body
         (res,) = body["results"]
@@ -1066,3 +1066,87 @@ def test_chunked_stream_holds_reader_lease(api, spark):
         live = {d for d, refs in sinks._LEASES.items() if len(refs)}
     assert root in live
     list(it)  # drain
+
+
+def _count_reads(monkeypatch) -> list:
+    """Record the table of every sinks.read_table call."""
+    calls: list = []
+    real = sinks.read_table
+
+    def spy(spark_, table_dir, table):
+        calls.append(table)
+        return real(spark_, table_dir, table)
+
+    monkeypatch.setattr(sinks, "read_table", spy)
+    return calls
+
+
+def _other_table(spark, td):
+    df = spark.createDataFrame(
+        [(dt.datetime(2024, 1, 1, 7, 0), "S", 1.0)],
+        "time timestamp, siteID string, pulses double",
+    )
+    sinks.append_points(df, td, "other")
+
+
+def test_select_reads_only_the_named_table(api, spark, monkeypatch):
+    """The registry reads a table on its first lookup: a statement over
+    one measurement reads that table once, whatever else the store
+    holds."""
+    _other_table(spark, api.table_dir)
+    calls = _count_reads(monkeypatch)
+    status, body = api.handle_query({"q": "SELECT flowRate FROM campus_flow"})
+    assert status == 200 and body["results"][0]["series"]
+    assert calls == ["campus_flow"]
+
+
+def test_listing_statements_read_no_table(api, spark, monkeypatch):
+    """SHOW MEASUREMENTS and DELETE FROM /re/ only list the store."""
+    _other_table(spark, api.table_dir)
+    calls = _count_reads(monkeypatch)
+    status, body = api.handle_query({"q": "SHOW MEASUREMENTS"})
+    assert status == 200
+    assert body["results"][0]["series"][0]["values"] == [
+        ["campus_flow"], ["other"]
+    ]
+    status, body = api.handle_query({"q": "DELETE FROM /^oth/"})
+    assert status == 200 and "error" not in body["results"][0]
+    assert calls == []
+    assert sinks.read_table(spark, api.table_dir, "other").count() == 0
+    assert sinks.read_table(spark, api.table_dir, "campus_flow").count() == 2
+
+
+@pytest.mark.parametrize("chunked", [False, True])
+def test_table_dropped_after_listing(api, spark, monkeypatch, chunked):
+    """A table dropped between the registry's listing and its first
+    lookup ends the statement as if the drop had come first: the
+    in-body error of an unknown measurement, never a 500."""
+    from ciws_server_spark.plans.influxql import execute_drop
+
+    real = sinks.load_tables
+    for stmt, error in (
+        ("SELECT flowRate FROM campus_flow",
+         "unknown measurement: 'campus_flow'"),
+        ("SELECT flowRate FROM /^campus/",
+         "no measurement matches '/^campus/'"),
+    ):
+        df = spark.createDataFrame(
+            [(dt.datetime(2024, 1, 1, 6, 0), "A", 2.5)],
+            "time timestamp, buildingID string, flowRate double",
+        )
+        sinks.append_points(df, api.table_dir, "campus_flow")
+        dropped = []
+
+        def listing_then_drop(spark_, table_dir):
+            reg = real(spark_, table_dir)
+            if not dropped:
+                assert "campus_flow" in list(reg)
+                execute_drop(spark_, "DROP MEASUREMENT campus_flow", table_dir)
+                dropped.append(True)
+            return reg
+
+        monkeypatch.setattr(sinks, "load_tables", listing_then_drop)
+        status, body = _query(api, {"q": stmt}, chunked)
+        monkeypatch.setattr(sinks, "load_tables", real)
+        assert status == 200, body
+        assert body["results"] == [{"statement_id": 0, "error": error}]

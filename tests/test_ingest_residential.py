@@ -139,7 +139,8 @@ def test_route_replay_wipes_empty_route(spark, landing, tmp_path):
     wipe that route table's ``batch_id=N`` leaves from the crashed
     earlier attempt — skipping the table leaves stale rows behind,
     contradicting the staged-append convergence contract (advisor
-    r14; mirrors _append_manifests_combined's empty-case wipe)."""
+    r14). The wipe is step 3 of ``sinks._publish``, which runs even
+    when the replay stages no rows for the route."""
     import pyspark.sql.functions as F
 
     from ciws_server_spark.sources import residential, sinks

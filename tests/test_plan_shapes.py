@@ -337,3 +337,167 @@ def test_q22_anti_join_consumes_distinct_keys_not_orders(spark):
     assert plan.count("HashAggregate") >= 2
     assert "GreaterThanOrEqual(o_orderdate" in plan  # pushed date cut
     # values stay pinned by the oracle (check_correctness q22)
+
+
+# --- small-statement path on file-backed stores ----------------------
+#
+# translate() reads a statement whose pruned file scans select at most
+# spark.sql.files.openCostInBytes as one partition: a panel is then
+# one Spark job with a local sort. The pins above use in-memory
+# frames, which the gate never touches; these use a tiny parquet
+# store: three days of two buildings plus one point at the next
+# midnight, one file per (building, date) dir — seven dirs.
+
+_PANEL = (
+    "SELECT mean(flowRate) FROM campus_flow WHERE buildingID = 'A' "
+    "AND time >= '2024-01-02T00:00:00Z' AND time < '2024-01-03T00:00:00Z' "
+    "GROUP BY time(6h)"
+)
+
+
+def _day_frame(spark):
+    rows = [
+        (dt.datetime(2024, 1, d, h), b, float(d * 100 + h))
+        for d in (1, 2, 3)
+        for h in range(24)
+        for b in ("A", "B")
+    ]
+    # a point exactly at the midnight closing the last day
+    rows.append((dt.datetime(2024, 1, 4), "A", 400.0))
+    return spark.createDataFrame(
+        rows, "time timestamp, buildingID string, flowRate double"
+    )
+
+
+@pytest.fixture(scope="module")
+def day_store(spark, tmp_path_factory):
+    from ciws_server_spark.sources import sinks
+
+    td = str(tmp_path_factory.mktemp("day_store"))
+    sinks.append_points(_day_frame(spark).coalesce(1), td, "campus_flow")
+    return td
+
+
+def _store_q(spark, td, stmt):
+    from ciws_server_spark.plans.influxql import query_measurement
+    from ciws_server_spark.sources import sinks
+
+    return query_measurement(spark, sinks.load_tables(spark, td), stmt)
+
+
+def _scans(df) -> list:
+    """The FileSourceScanExec leaves of ``df``'s physical plan."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    leaves = [leaves.apply(i) for i in range(leaves.size())]
+    return [
+        leaf for leaf in leaves
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+
+
+@pytest.fixture()
+def open_cost(spark):
+    """Set spark.sql.files.openCostInBytes for one test, then restore."""
+    key = "spark.sql.files.openCostInBytes"
+    before = spark.conf.get(key, None)
+    yield lambda v: spark.conf.set(key, str(v))
+    if before is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, before)
+
+
+def test_small_panel_on_files_is_one_job(spark, day_store):
+    from ciws_server_spark.sources.http_api import InfluxHTTPApi
+
+    api = InfluxHTTPApi(spark, day_store)
+    sc = spark.sparkContext
+    group = "plan-shapes-small-panel"
+    sc.setJobGroup(group, "small panel")
+    try:
+        status, body = api.handle_query({"q": _PANEL})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert status == 200
+    assert body["results"][0]["series"][0]["values"] == [
+        ["2024-01-02T00:00:00Z", 202.5],
+        ["2024-01-02T06:00:00Z", 208.5],
+        ["2024-01-02T12:00:00Z", 214.5],
+        ["2024-01-02T18:00:00Z", 220.5],
+    ]
+    plan = _plan(_store_q(spark, day_store, _PANEL))
+    assert "Coalesce" in plan
+    assert _count(plan, r"\(\d+\) Exchange") == 0
+
+
+def test_panel_above_open_cost_keeps_exchange(spark, day_store, open_cost):
+    (scan,) = _scans(_store_q(spark, day_store, _PANEL))
+    open_cost(scan.selectedPartitions().totalFileSize() - 1)
+    df = _store_q(spark, day_store, _PANEL)
+    plan = _plan(df)
+    assert "Coalesce" not in plan
+    assert "partial_avg" in plan
+    assert _count(plan, r"Arguments: hashpartitioning") == 1
+    assert [r["mean_flowRate"] for r in df.collect()] == [
+        202.5, 208.5, 214.5, 220.5
+    ]
+
+
+def test_tag_group_above_open_cost_scans_in_parallel(
+    spark, day_store, open_cost
+):
+    stmt = "SELECT last(flowRate) FROM campus_flow GROUP BY buildingID"
+    open_cost(1024)
+    df = _store_q(spark, day_store, stmt)
+    (scan,) = _scans(df)
+    assert scan.selectedPartitions().totalFileSize() > 1024
+    assert scan.inputRDD().getNumPartitions() > 1
+    assert "Coalesce" not in _plan(df)
+    # GROUP BY <tag> row order is incidental; compare as a set
+    assert {(r["buildingID"], r["last_flowRate"]) for r in df.collect()} == {
+        ("A", 400.0), ("B", 323.0)
+    }
+
+
+def test_one_day_panel_selects_one_date_dir(spark, day_store):
+    from ciws_server_spark.plans.influxql import query_measurement
+
+    df = _store_q(spark, day_store, _PANEL)
+    (scan,) = _scans(df)
+    assert scan.selectedPartitions().partitionCount() == 1
+    want = query_measurement(spark, {"campus_flow": _day_frame(spark)}, _PANEL)
+    assert df.collect() == want.collect()
+
+
+@pytest.mark.parametrize(
+    "where,dirs",
+    [
+        # a strict upper bound at midnight ends on the day before
+        ("time >= '2024-01-02T00:00:00Z' AND time < '2024-01-03'", 2),
+        # an inclusive one keeps the next day's midnight point
+        ("time >= '2024-01-03T00:00:00Z' AND time <= '2024-01-04'", 3),
+        ("time > '2024-01-02T23:59:59Z'", 5),
+        # a range under OR bounds no row on its own: nothing pruned
+        ("time < '2024-01-02' OR time >= '2024-01-03T12:00:00Z'", 7),
+        ("(time >= '2024-01-02' AND buildingID = 'A') AND "
+         "(flowRate > 210 OR time < '2024-01-01')", 3),
+        # local wall clock under tz(): 09:00 in Tokyo is 00:00 UTC
+        ("time >= '2024-01-02 09:00:00' AND time < '2024-01-03 09:00:00' "
+         "tz('Asia/Tokyo')", 2),
+    ],
+)
+def test_date_pruning_keeps_results(spark, day_store, where, dirs):
+    """A WHERE time range selects only the (building, date) dirs it
+    allows, and the rows equal those of the same statement over an
+    in-memory frame, which nothing prunes."""
+    from ciws_server_spark.plans.influxql import query_measurement
+
+    stmt = f"SELECT flowRate, buildingID FROM campus_flow WHERE {where}"
+    df = _store_q(spark, day_store, stmt)
+    (scan,) = _scans(df)
+    assert scan.selectedPartitions().partitionCount() == dirs
+    want = query_measurement(spark, {"campus_flow": _day_frame(spark)}, stmt)
+    assert sorted(df.collect()) == sorted(want.collect())
