@@ -54,9 +54,19 @@ def headline_queries() -> dict:
 # distinguish from a real regression. Guard: a fixed-cost pure-CPU
 # canary (400M xxhash64 folds across all cores, no I/O, no data
 # dependence) timed before AND after the sweep against a ratcheted
-# floor recorded in tools/canary_floor.json. If either reading exceeds
-# floor×1.3 the artifact is stamped "load_suspect": true — numbers are
-# still reported, but flagged as not comparable round-over-round.
+# floor recorded in tools/canary_floor_c{N}.json. If either reading
+# exceeds floor×_CANARY_THRESHOLD the artifact is stamped
+# "load_suspect": true — numbers are still reported, but flagged as
+# not comparable round-over-round.
+
+
+def _cpus_tag() -> str:
+    """``c<N>`` for the session's core count, parsed as an int, so
+    ``08`` and ``8 `` share the ``c8`` floor and history."""
+    from ciws_server_spark.session import default_parallelism
+
+    return f"c{default_parallelism()}"
+
 
 # All floor/history sidecars live here; tests point it at a tmp dir
 # via SPARK_GRAFT_FLOOR_DIR so synthetic-load runs can't poison the
@@ -71,8 +81,7 @@ _FLOOR_DIR = os.environ.get(
 # slower, which against a 32-core floor auto-stamped EVERY scaling run
 # load_suspect and kept its readings out of any history.
 _CANARY_FLOOR_FILE = os.path.join(
-    _FLOOR_DIR,
-    f"canary_floor_c{os.environ.get('SPARK_GRAFT_CPUS', '32')}.json",
+    _FLOOR_DIR, f"canary_floor_{_cpus_tag()}.json"
 )
 _CANARY_ROWS = 400_000_000
 #: Calibrated on this box (round 8): idle fresh-JVM min-of-3 canary
@@ -200,8 +209,7 @@ def _history_key(sf_dir_or_sf) -> str:
     floor; the legacy 'sf0.1' entries were migrated to 'sf0.1c32'
     (this box's historical core count) in the repo sidecars."""
     sf = sf_dir_or_sf if isinstance(sf_dir_or_sf, float) else _sf_of(sf_dir_or_sf)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return f"sf{sf}c{cpus}"
+    return f"sf{sf}{_cpus_tag()}"
 
 
 def _median3(fn) -> float:

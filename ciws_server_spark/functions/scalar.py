@@ -156,15 +156,6 @@ def epoch_seconds(col: Column | str) -> Column:
     return c.cast("double")
 
 
-def hex_digit_value(col: Column) -> Column:
-    """Value 0-15 of a single lowercase hex character column.
-
-    Built from ``instr`` so the identical expression exists in ANSI SQL
-    (``strpos``) — used by the cross-engine SimHash/MinHash operators.
-    """
-    return F.instr(F.lit("0123456789abcdef"), col) - F.lit(1)
-
-
 # --- The reference's row-wise scalar surface (SURVEY.md §2.8) --------
 
 def extract_site_metadata(line: Column) -> Column:

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType
 
-from ..functions.vectors import dot, pair_cosine
+from ..functions.vectors import pair_cosine
 from ..tables import spread_if_few_splits, table
 
 _N_QUERIES = 10  # vec_id < 10 are the demo query vectors
@@ -101,16 +101,6 @@ def _plane_dot_sql(plane: list[float], col: str = "e") -> str:
     )
 
 
-def _bucket_col(emb_col, planes: list[list[float]] | None = None) -> F.Column:
-    """LSH bucket id: bit p = sign of <v, plane_p>."""
-    bucket = F.lit(0)
-    for p, plane in enumerate(planes if planes is not None else hyperplanes()):
-        w = F.array(*[F.lit(x) for x in plane])
-        bit = F.when(dot(emb_col, w) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = bucket + bit
-    return bucket.cast("int")
-
-
 def _table_planes(t: int, n_planes: int) -> list[list[float]]:
     return hyperplanes(n_planes, _DIM, seed=f"mt{t}")
 
@@ -170,12 +160,6 @@ def _single_bucket_udf(emb: pd.Series) -> pd.Series:
 #: one process (tests, notebooks, tools rewriting tmp dirs) invalidates
 #: naturally instead of sizing the plane count from a stale total.
 _CORPUS_ROWS_CACHE: dict[tuple, int] = {}
-
-
-def clear_corpus_cache() -> None:
-    """Drop all cached corpus row counts (for fixture-regenerating
-    tools whose rewrite may not change size/mtime granularity)."""
-    _CORPUS_ROWS_CACHE.clear()
 
 
 def corpus_n_planes(spark: SparkSession, sf_dir: str) -> int:

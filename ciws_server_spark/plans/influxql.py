@@ -2318,18 +2318,13 @@ def _null_fill_unknown_identifiers(
     return df
 
 
-def _date_bounds(df: DataFrame, ranges: list):
-    """The ``date`` bounds that the conjunctive time ranges of a WHERE
-    imply, as one Column, when ``df`` is a scan of a store table whose
-    ``date`` partition is ``to_date(time)``
+def _day_partitioned_relation(df: DataFrame):
+    """The ``HadoopFsRelation`` that ``df`` is a bare scan of, when it
+    is a store table whose ``date`` partition is ``to_date(time)``
     (:func:`sinks.date_is_day_of_time`); None for any other frame — a
     derived one, or a ``/write`` measurement that may carry its own
-    ``date`` field. Spark cannot infer a partition bound from a bound
-    on ``time``, so without these a one-day panel selects every
-    day-file of its building and skips their rows by row-group
-    statistics. Each day is taken by ``to_date`` of the WHERE's own
-    literal, in the session time zone the writers took
-    ``to_date(time)`` in."""
+    ``date`` field. Only on such a scan does a day partition bound the
+    times of its rows."""
     from ..sources import sinks
 
     dtypes = dict(df.dtypes)
@@ -2348,6 +2343,20 @@ def _date_bounds(df: DataFrame, ranges: list):
         rel.location().rootPaths().head().getName()
     ):
         return None
+    return rel
+
+
+def _date_bounds(df: DataFrame, ranges: list):
+    """The ``date`` bounds that the conjunctive time ranges of a WHERE
+    imply, as one Column, when ``df`` is a day-partitioned scan
+    (:func:`_day_partitioned_relation`); else None. Spark cannot infer
+    a partition bound from a bound on ``time``, so without these a
+    one-day panel selects every day-file of its building and skips
+    their rows by row-group statistics. Each day is taken by
+    ``to_date`` of the WHERE's own literal, in the session time zone
+    the writers took ``to_date(time)`` in."""
+    if _day_partitioned_relation(df) is None:
+        return None
     # one SQL expression: every Column call costs the driver several
     # py4j round trips
     return F.expr(
@@ -2359,6 +2368,96 @@ def _date_bounds(df: DataFrame, ranges: list):
             for op, lit in ranges
         )
     )
+
+
+#: a ``first(f)`` or ``last(f)`` select item on one named field
+_EDGE_SELECTOR_RE = re.compile(
+    r'^(first|last)\s*\(\s*("[^"]+"|[A-Za-z_]\w*)\s*\)$', re.I
+)
+_ISO_DAY_RE = re.compile(r"\d{4}-\d{2}-\d{2}")
+
+
+def _sql_string(v: str) -> str:
+    """``v`` as a Spark SQL string literal."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _selector_edge_days(df: DataFrame, m, time_col: str) -> DataFrame:
+    """``df`` filtered, for a ``last()`` (``first()``) statement, to
+    each group's newest (oldest) ``date`` partition wherever the
+    Parquet footers prove that every selected field has a value
+    there; ``df`` unchanged when the statement or frame does not
+    qualify (see :func:`translate` for the rule).
+
+    Phase 1 lists the scan's file index
+    (:func:`sinks.indexed_partition_files`) and keeps, per group key,
+    its edge day and that day's files. Phase 2
+    (:func:`sinks.footers_prove_values`) keeps a group on that day
+    only if its files hold a non-null value of every field; any other
+    group keeps all of its days. Neither phase reads data or starts a
+    Spark job."""
+    from ..sources import sinks
+
+    if time_col != "time" or any(
+        m.group(k) for k in ("where", "fill", "orderby")
+    ):
+        return df
+    items = [
+        _EDGE_SELECTOR_RE.match(s.strip())
+        for s in _split_commas(m.group("select"))
+    ]
+    if not all(items) or len({i.group(1).lower() for i in items}) != 1:
+        return df
+    rel = _day_partitioned_relation(df)
+    if rel is None:
+        return df
+    parts = list(rel.partitionSchema().fieldNames())
+    dtypes = dict(df.dtypes)
+    groups = []
+    for g in _split_commas(m.group("group")) if m.group("group") else ():
+        name = _unquote(g)
+        if name not in parts or dtypes.get(name) != "string":
+            return df
+        groups.append(name)
+    data_cols = {c.lower(): c for c in df.columns if c not in parts}
+    fields = [data_cols.get(_unquote(i.group(2)).lower()) for i in items]
+    if None in fields:
+        return df
+    files = sinks.indexed_partition_files(df, parts)
+    if files is None:
+        return df
+    day_at, key_at = parts.index("date"), [parts.index(g) for g in groups]
+    by_group: dict[tuple, list] = {}
+    for values, uri in files:
+        if values[day_at] is not None and not _ISO_DAY_RE.fullmatch(
+            values[day_at]
+        ):
+            return df
+        by_group.setdefault(
+            tuple(values[i] for i in key_at), []
+        ).append((values[day_at], uri))
+    edge = max if items[0].group(1).lower() == "last" else min
+    quoted = ["`" + g.replace("`", "``") + "`" for g in groups]
+    terms, narrowed = [], False
+    for key, day_files in by_group.items():
+        cond = [
+            f"{g} IS NULL" if v is None else f"{g} = {_sql_string(v)}"
+            for g, v in zip(quoted, key)
+        ]
+        days = {d for d, _ in day_files if d is not None}
+        if days:
+            day = edge(days)
+            if sinks.footers_prove_values(
+                [u for d, u in day_files if d == day], fields
+            ):
+                cond.append(f"`date` = DATE'{day}'")
+                narrowed = True
+        terms.append(" AND ".join(cond))
+    if not narrowed:
+        return df
+    # one SQL expression: every Column call costs the driver several
+    # py4j round trips
+    return df.where(F.expr(" OR ".join(f"({t})" for t in terms)))
 
 
 def _one_partition_if_small(out: DataFrame) -> DataFrame:
@@ -2406,6 +2505,24 @@ def translate(
     its parallel scan. Any other input — a larger one, an in-memory
     frame, a Python data source, the measurements of a ``FROM /re/``
     or ``FROM a, b`` statement — plans as before.
+
+    Selectors read each group's newest day first. A statement whose
+    SELECT items are all ``last(f)`` (or all ``first(f)``) on fields
+    of the table, with no WHERE, ``fill()`` or ORDER BY, GROUP BY
+    only string partition tags of the table (or nothing), over a bare
+    scan of a table whose ``date`` is ``to_date(time)`` and outside a
+    ``FROM /re/`` or ``FROM a, b`` statement, scans for each group
+    only its newest ``date`` partition (its oldest, for ``first()``)
+    — provided the Parquet footers of that day's files prove a
+    non-null value of every selected field: ``num_rows -
+    null_count``, summed over their row groups, is above 0. A group
+    without that proof (a field that stopped arriving, a file that
+    lacks the column, a row group without a null count) keeps all of
+    its days. The partition list comes from the file index Spark
+    scans, and no data is read to choose (:func:`_selector_edge_days`).
+    The fleet ``last()`` of one value per building then reads one
+    file per building, not its whole history, and usually passes the
+    one-partition gate. Any other statement plans as before.
     """
     return _translate(df, query, time_col, now, fan_out=False)
 
@@ -2449,7 +2566,9 @@ def _translate(
                 cond = cond & days
         out = out.where(cond)
     if not fan_out:
-        out = _one_partition_if_small(out)
+        out = _one_partition_if_small(
+            _selector_edge_days(out, m, time_col)
+        )
 
     # GROUP BY -----------------------------------------------------
     group_cols = []

@@ -94,6 +94,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+        # No Python call-site capture on every Column call (several
+        # py4j round trips each). PySpark reads this once per process,
+        # from the first active session, so it cannot be runtime conf.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)

@@ -155,6 +155,79 @@ def date_is_day_of_time(scan_root: str) -> bool:
     return "date" in PARTITIONING.get(table, ())
 
 
+#: Spark's ``%XX`` escape of a character in a partition directory name
+_PARTITION_ESCAPE_RE = re.compile(r"%([0-9A-Fa-f]{2})")
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def indexed_partition_files(df: DataFrame, columns: list[str]):
+    """``(partition values, file URI)`` for every file in the file
+    index that the bare scan ``df`` reads, with the values in the
+    order of ``columns`` (the scan's partition schema) and a null tag
+    as None; None when a path does not end in those ``col=value``
+    directories.
+
+    Reads no data: the paths come from the index Spark will scan, in
+    one py4j call, so they match the pinned snapshot even when an
+    append renames files into the live version dir afterwards. Each
+    value is the URI-decoded directory name with Spark's own ``%XX``
+    escaping undone."""
+    from urllib.parse import unquote
+
+    jvm = df.sparkSession._jvm
+    listing = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        df._jdf.inputFiles()
+    ).mkString("\n")
+    out = []
+    for uri in listing.split("\n") if listing else ():
+        dirs = uri.split("/")[-len(columns) - 1:-1]
+        values = []
+        for col, d in zip(columns, dirs):
+            key, eq, raw = unquote(d).partition("=")
+            if key != col or not eq:
+                return None
+            values.append(
+                None if raw == _NULL_PARTITION
+                else _PARTITION_ESCAPE_RE.sub(
+                    lambda h: chr(int(h.group(1), 16)), raw
+                )
+            )
+        if len(values) != len(columns):
+            return None
+        out.append((tuple(values), uri))
+    return out
+
+
+def footers_prove_values(uris: list[str], fields: list[str]) -> bool:
+    """Whether the Parquet footers of the files ``uris`` prove that
+    each of ``fields`` holds at least one non-null value: summed over
+    every row group, ``num_rows - null_count`` is above 0 for each
+    field. Reads footers only, no data and no Spark job. Unproven
+    (False) when a file is not local, cannot be read, lacks a field's
+    column, or has a row group without a null count."""
+    import pyarrow.parquet as pq
+
+    non_null = dict.fromkeys(fields, 0)
+    for uri in uris:
+        if not uri.startswith("file://"):
+            return False
+        try:
+            md = pq.read_metadata(_uri_to_path(uri))
+        except (OSError, ValueError):
+            return False
+        index = {name: i for i, name in enumerate(md.schema.names)}
+        if any(f not in index for f in fields):
+            return False
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            for f in fields:
+                stats = rg.column(index[f]).statistics
+                if stats is None or not stats.has_null_count:
+                    return False
+                non_null[f] += rg.num_rows - stats.null_count
+    return all(n > 0 for n in non_null.values())
+
+
 class InvalidTableName(ValueError):
     """A measurement name that cannot be a single path component —
     refused at the storage boundary (wire-fuzz-found, r12: a mutated

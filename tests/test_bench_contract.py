@@ -195,6 +195,17 @@ def test_warm_retry_needed_gates_on_floor_history():
     assert retry and fl == 1.0
 
 
+@pytest.mark.parametrize("cpus", ["8", "08", "8 "])
+def test_history_key_parses_core_count(cpus, monkeypatch):
+    """The core count is read as an int, so spellings of one count
+    share one history and one canary floor file."""
+    import bench
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+    assert bench._history_key(0.1) == "sf0.1c8"
+    assert bench._cpus_tag() == "c8"
+
+
 def test_bench_warm_retry_flags_inflated_queries(tmp_path):
     """End-to-end dirty-window response: with rolling floors seeded
     far below any achievable warm time, every query must take exactly

@@ -501,3 +501,103 @@ def test_date_pruning_keeps_results(spark, day_store, where, dirs):
     assert scan.selectedPartitions().partitionCount() == dirs
     want = query_measurement(spark, {"campus_flow": _day_frame(spark)}, stmt)
     assert sorted(df.collect()) == sorted(want.collect())
+
+
+# --- newest-partition-first selectors ---------------------------------
+#
+# A last() (first()) statement with no WHERE, grouped by partition
+# tags only, scans each group's newest (oldest) date dir when its
+# footers prove a value there; every answer must equal the in-memory
+# frame's, which nothing narrows. In day_store, building B stops a day
+# before A (A's last point is the next midnight). edge_store holds the
+# cases the footer proof guards:
+#   A              days 1-3; flowRate null on day 3; siteID s1
+#   B              days 1-2, so it stops a day early; tempC null on
+#                  day 2; siteID s2, as for the two below
+#   null building  days 1-2
+#   a/b c%'        days 2-3 (Spark escapes "/", "%" and "'" in paths)
+
+_FLEET = "SELECT last(flowRate) FROM campus_flow GROUP BY buildingID"
+_ODD_TAG = "a/b c%'"
+
+
+def _edge_frame(spark):
+    spans = {"A": (1, 2, 3), "B": (1, 2), None: (1, 2), _ODD_TAG: (2, 3)}
+    rows = [
+        (
+            dt.datetime(2024, 1, d, h), b, "s1" if b == "A" else "s2",
+            None if (b, d) == ("A", 3) else float(d * 100 + h),
+            None if (b, d) == ("B", 2) else float(d - h),
+        )
+        for b, days in spans.items()
+        for d in days
+        for h in (0, 6, 12)
+    ]
+    return spark.createDataFrame(
+        rows, "time timestamp, buildingID string, siteID string, "
+        "flowRate double, tempC double"
+    )
+
+
+@pytest.fixture(scope="module")
+def edge_store(spark, tmp_path_factory):
+    from ciws_server_spark.sources import sinks
+
+    td = str(tmp_path_factory.mktemp("edge_store"))
+    sinks.append_points(_edge_frame(spark).coalesce(1), td, "campus_flow")
+    return td
+
+
+def _rows(df) -> set:
+    return {tuple(r) for r in df.collect()}
+
+
+def test_fleet_last_reads_newest_day_per_building(spark, day_store):
+    from ciws_server_spark.plans.influxql import query_measurement
+
+    df = _store_q(spark, day_store, _FLEET)
+    (scan,) = _scans(df)
+    # A's 2024-01-04 and B's 2024-01-03, not all seven dirs
+    assert scan.selectedPartitions().partitionCount() == 2
+    sc = spark.sparkContext
+    group = "plan-shapes-fleet-last"
+    sc.setJobGroup(group, "fleet last")
+    try:
+        got = _rows(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    want = query_measurement(spark, {"campus_flow": _day_frame(spark)}, _FLEET)
+    assert got == _rows(want) == {("A", 400.0), ("B", 323.0)}
+
+
+@pytest.mark.parametrize(
+    "stmt,dirs",
+    [
+        # A's newest day is all-null: A keeps its three dirs
+        (_FLEET, 6),
+        ("SELECT first(flowRate) FROM campus_flow GROUP BY buildingID", 4),
+        # no GROUP BY: one group, whose newest day holds A's nulls and
+        # the values of a/b c%'
+        ("SELECT last(flowRate) FROM campus_flow", 2),
+        # B's newest day has only null tempC: B keeps both of its dirs
+        ("SELECT last(tempC) FROM campus_flow GROUP BY buildingID", 5),
+        ("SELECT last(flowRate), last(tempC) FROM campus_flow "
+         "GROUP BY buildingID", 7),
+        # a tag that is not a partition column: today's plan
+        ("SELECT last(flowRate) FROM campus_flow GROUP BY siteID", 9),
+        # a WHERE bound: today's date pruning only
+        ("SELECT last(flowRate) FROM campus_flow "
+         "WHERE time < '2024-01-03' GROUP BY buildingID", 7),
+    ],
+)
+def test_edge_selectors_keep_results(spark, edge_store, stmt, dirs):
+    from ciws_server_spark.plans.influxql import query_measurement
+
+    df = _store_q(spark, edge_store, stmt)
+    (scan,) = _scans(df)
+    assert scan.selectedPartitions().partitionCount() == dirs
+    want = query_measurement(spark, {"campus_flow": _edge_frame(spark)}, stmt)
+    assert _rows(df) == _rows(want)
