@@ -524,18 +524,20 @@ def emit_result(result: dict, budget: int = _STDOUT_LINE_BUDGET) -> str:
 
 
 def record_query_floors(
-    sf_key: str, timings: dict[str, float], flagged: bool
+    sf_key: str, timings: dict[str, float], flagged: bool, inflated: list[str]
 ) -> None:
     """Fold this sweep's warm readings into the rolling per-query
     history — UNLESS any detector flagged the sweep (a loaded sweep
     must not ratchet the quiet floors upward, the same hygiene rule
-    as the canary history)."""
+    as the canary history). A query the warm retry left ``inflated``
+    is skipped even in an unflagged sweep, for the same reason."""
     if flagged:
         return
     store = _query_floor_store()
     per_sf = store.setdefault(sf_key, {})
     for q, t in timings.items():
-        per_sf[q] = (per_sf.get(q, []) + [t])[-_QUERY_FLOOR_MAX:]
+        if q not in inflated:
+            per_sf[q] = (per_sf.get(q, []) + [t])[-_QUERY_FLOOR_MAX:]
     try:
         with open(_QUERY_FLOOR_FILE, "w") as f:
             json.dump(store, f)
@@ -817,7 +819,7 @@ def main() -> None:
         or canary_post["loaded"]
         or inflation["loaded"]
     )
-    record_query_floors(sf_key, timings, load_suspect)
+    record_query_floors(sf_key, timings, load_suspect, inflated)
     if inflation["median_inflation"] is not None:
         print(
             f"# query-floor inflation: median "

@@ -38,8 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import md5_normalized, tokens, word_shingles
 from ..functions.vectors import pair_cosine
-from ..tables import table
-from .tpch import _conf_bytes
+from ..tables import spread_if_few_splits, table
 
 _NUM_HASHES = 16
 _BANDS = 4  # 4 bands × 4 rows
@@ -131,7 +130,7 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The raw docs are repartitioned by doc_id BEFORE shingling — only
     when the scan yields fewer splits than cores
-    (``_spread_if_few_splits``; at cluster scale the spread never
+    (``spread_if_few_splits``; at cluster scale the spread never
     fires and the scan's own splits carry the parallelism) — and the
     result is persisted: minhash signatures, both Jaccard
     verification sides and the size counts all consume it, and
@@ -140,7 +139,7 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale the same role is played by a materialized shingle table or
     checkpoint.
     """
-    docs = _spread_if_few_splits(spark, table(spark, sf_dir, "documents"))
+    docs = spread_if_few_splits(spark, table(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id",
         F.explode(F.array_distinct(word_shingles("text", 3))).alias("shingle"),
@@ -318,15 +317,6 @@ def dedup_ngram_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: to ``explode``.
 
 
-# r16: the spread helper + input-bytes probe moved to tables.py so
-# text_analysis / multimodal / similarity can share them (their
-# unconditional repartitions were the same §2.4 full-corpus exchange
-# this module shed in r15). The underscore names stay importable for
-# existing call sites and tools.
-from ..tables import input_bytes as _input_bytes  # noqa: E402
-from ..tables import spread_if_few_splits as _spread_if_few_splits  # noqa: E402
-
-
 def band_signatures(
     docs: DataFrame,
     strategy: str | None = None,
@@ -335,10 +325,8 @@ def band_signatures(
     """(doc_id, band, band_hash) MinHash-LSH index rows for any
     (doc_id, text) frame — exactly ``bands`` rows per document.
 
-    This IS the corpus LSH index: the batch near-dup query self-joins
-    it, and the streaming detector (streaming/dedup.py) joins each
-    micro-batch's signatures against it as the static side of a
-    stream-static join.
+    This IS the corpus LSH index: the batch near-dup query
+    (``dedup_minhash_lsh``) self-joins it on (band, band_hash).
 
     ``strategy`` picks the physical shape (see the r15 strategy
     decision above): ``"explode"`` (codegen'd; the default at every
@@ -457,75 +445,6 @@ def band_signatures(
     ).select("doc_id", "bb.band", "bb.band_hash")
 
 
-def verify_pairs_cross(
-    docs_a: DataFrame,
-    docs_b: DataFrame,
-    candidates: DataFrame,
-    threshold: float = _JACCARD_THRESHOLD,
-) -> DataFrame:
-    """Exact-Jaccard verification of (doc_a, doc_b) candidate pairs
-    whose two sides come from DIFFERENT document frames (e.g. a
-    streaming micro-batch vs the static corpus).
-
-    Same scale contract as the self-join verify in dedup_minhash_lsh:
-    shingles are derived for candidate docs only (broadcast semi-join
-    of the bounded candidate id list), sizes via F.size on the in-row
-    array, and the whole stage has ONE shuffle (the n_common
-    aggregate).
-    """
-    candidates = candidates.localCheckpoint(eager=True)
-
-    def cand_shingles(docs: DataFrame, ids: DataFrame):
-        with_sh = (
-            docs.join(F.broadcast(ids), "doc_id")
-            .select(
-                "doc_id",
-                F.array_distinct(word_shingles("text", 3)).alias("shingles"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        sh = with_sh.select("doc_id", F.explode("shingles").alias("shingle"))
-        sizes = with_sh.select("doc_id", F.size("shingles").alias("n_shingles"))
-        return sh, sizes
-
-    sh_a, sizes_a = cand_shingles(
-        docs_a, candidates.select(F.col("doc_a").alias("doc_id")).distinct()
-    )
-    sh_b, sizes_b = cand_shingles(
-        docs_b, candidates.select(F.col("doc_b").alias("doc_id")).distinct()
-    )
-    common = (
-        sh_a.select(F.col("doc_id").alias("doc_a"), "shingle")
-        .join(F.broadcast(candidates), "doc_a")
-        .join(
-            sh_b.select(F.col("doc_id").alias("doc_b"), "shingle"),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = F.broadcast(
-        sizes_a.select(
-            F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na")
-        )
-    )
-    sb = F.broadcast(
-        sizes_b.select(
-            F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb")
-        )
-    )
-    jac = F.col("n_common").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("n_common")
-    ).cast("double")
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", F.round(jac, 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH banding near-dup (the 100 TB-scale dedup path).
 
@@ -568,7 +487,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns.
     """
     docs = table(spark, sf_dir, "documents")
-    src = _spread_if_few_splits(spark, docs)
+    src = spread_if_few_splits(spark, docs)
     bands = band_signatures(src)
     # both sides of the bucket self-join consume `bands`; without a
     # materialization each side re-runs the whole signature pipeline
@@ -741,7 +660,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan is split-starved (r15 — the unconditional form was a full
     extra corpus exchange at cluster scale).
     """
-    docs = _spread_if_few_splits(spark, table(spark, sf_dir, "documents"))
+    docs = spread_if_few_splits(spark, table(spark, sf_dir, "documents"))
     # r15: the 60 hash bits are parsed from the hex string ONCE
     # (conv of the first 15 chars → one long H) and every lane is a
     # shift/mask on H. The previous form ran 15 substr allocations +

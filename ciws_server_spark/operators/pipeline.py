@@ -429,50 +429,6 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CHUNK_WORDS = 8
 
 
-def chunk_instances(docs: DataFrame) -> DataFrame:
-    """(doc_id, ci, chunk): every ``_CHUNK_WORDS``-word window of every
-    document, as a row-local array expression (split + slice under
-    ``transform`` — one array op per doc, no per-word explode). Shared
-    by the batch operator and the streaming chunk-dedup service so
-    both planes chunk bit-identically."""
-    words = F.split(F.col("text"), " ")
-    n = F.ceil(F.size(words) / F.lit(_CHUNK_WORDS)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n - F.lit(1)),
-        lambda j: F.array_join(
-            F.slice(words, j * _CHUNK_WORDS + F.lit(1), F.lit(_CHUNK_WORDS)),
-            " ",
-        ),
-    )
-    return docs.select("doc_id", F.posexplode(chunks).alias("ci", "chunk"))
-
-
-def chunk_dedup_stats(flagged: DataFrame) -> DataFrame:
-    """Per-document rollup of a (doc_id, ci, chunk, keep) frame:
-    (n_chunks, n_kept, dedup_text reassembled from surviving chunks in
-    order). The collect_list is bounded by document size — the bound
-    every per-doc operator already has."""
-    return (
-        flagged.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.count(F.when(F.col("keep"), 1)).alias("n_kept"),
-            F.array_join(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(
-                            F.when(F.col("keep"), F.struct("ci", "chunk"))
-                        )
-                    ),
-                    lambda s: s["chunk"],
-                ),
-                " ",
-            ).alias("dedup_text"),
-        )
-        .orderBy("doc_id")
-    )
-
-
 def pipeline_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk-level exact dedup — the paragraph-granularity pass of a
     training-data pipeline (Dolma-style paragraph dedup, adapted to
@@ -493,9 +449,37 @@ def pipeline_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantically identical.
     """
     docs = docs_scan(spark, sf_dir)
-    ex = chunk_instances(docs)
+    words = F.split(F.col("text"), " ")
+    n = F.ceil(F.size(words) / F.lit(_CHUNK_WORDS)).cast("int")
+    chunks = F.transform(
+        F.sequence(F.lit(0), n - F.lit(1)),
+        lambda j: F.array_join(
+            F.slice(words, j * _CHUNK_WORDS + F.lit(1), F.lit(_CHUNK_WORDS)),
+            " ",
+        ),
+    )
+    ex = docs.select("doc_id", F.posexplode(chunks).alias("ci", "chunk"))
     rn = F.row_number().over(W.partitionBy("chunk").orderBy("doc_id", "ci"))
-    return chunk_dedup_stats(ex.withColumn("keep", rn == F.lit(1)))
+    flagged = ex.withColumn("keep", rn == F.lit(1))
+    return (
+        flagged.groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_chunks"),
+            F.count(F.when(F.col("keep"), 1)).alias("n_kept"),
+            F.array_join(
+                F.transform(
+                    F.sort_array(
+                        F.collect_list(
+                            F.when(F.col("keep"), F.struct("ci", "chunk"))
+                        )
+                    ),
+                    lambda s: s["chunk"],
+                ),
+                " ",
+            ).alias("dedup_text"),
+        )
+        .orderBy("doc_id")
+    )
 
 
 QUERIES = {

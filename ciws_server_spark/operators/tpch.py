@@ -33,7 +33,7 @@ from ..functions.scalar import (
     money,
     unscale,
 )
-from ..tables import table
+from ..tables import conf_bytes, table
 
 # Exact-decimal revenue expression used across Q3/Q5/window queries.
 # Built lazily (function, not module constant): constructing a Column
@@ -57,12 +57,6 @@ _REVENUE_SQL = (
 #: for a fat-scan workload — the non-ANSI long sum would wrap SILENTLY,
 #: so q1 falls back to the exact DECIMAL form instead of guessing.
 _Q1_LONG_SAFE_PARTITION_BYTES = 2 << 30
-
-
-# r16: hoisted to tables.py so the spread helper (shared by dedup /
-# text / multimodal / similarity) can live below the operators layer;
-# the old name stays importable for existing call sites.
-from ..tables import conf_bytes as _conf_bytes  # noqa: E402
 
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,7 +94,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     but this operator scans parquet directly, so the conf governs.)
     """
     if (
-        _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
+        conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
         > _Q1_LONG_SAFE_PARTITION_BYTES
     ):
         return q1_pricing_summary_decimal(spark, sf_dir)
@@ -299,7 +293,7 @@ def rollup_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials ≤ 2e9, ×4e9 int64 headroom; guard kept for symmetry.
     """
     if (
-        _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
+        conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
         > _Q1_LONG_SAFE_PARTITION_BYTES
     ):
         return rollup_pricing_decimal(spark, sf_dir)
@@ -629,7 +623,7 @@ def date_functions_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     trivially. Emitted doubles are dsum-identical (exact decimal
     downshift; pinned by tests/test_q1_fixed_point.py)."""
     if (
-        _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
+        conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
         > _Q1_LONG_SAFE_PARTITION_BYTES
     ):
         return date_functions_orders_decimal(spark, sf_dir)
@@ -710,7 +704,7 @@ def cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Past the guarded split size, fall back to the DECIMAL form.
     """
     if (
-        _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
+        conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
         > _Q1_LONG_SAFE_PARTITION_BYTES
     ):
         return cube_order_stats_decimal(spark, sf_dir)
@@ -975,7 +969,7 @@ def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.14s → ~0.6s at sf1, orders-scan-floor bound.
     """
     if (
-        _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
+        conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
         > _Q1_LONG_SAFE_PARTITION_BYTES
     ):
         return grouping_sets_orders_decimal(spark, sf_dir)

@@ -46,8 +46,7 @@ from ..functions.scalar import (
     money,
     unscale,
 )
-from ..tables import table
-from .dedup import _input_bytes
+from ..tables import input_bytes, table
 from .tpch import _REVENUE_SQL, _revenue
 
 #: q8's size gate for broadcasting the pruned (date+ASIA-semi,
@@ -239,7 +238,7 @@ def q8_national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (any cluster-scale corpus) the stats-estimated plan stands
     # exactly as before — the same size-conditional physical-strategy
     # idea as AQE's own join selection, never a local-only constant.
-    if _input_bytes(orders) < _Q8_BCAST_ORDERS_MAX_BYTES:
+    if input_bytes(orders) < _Q8_BCAST_ORDERS_MAX_BYTES:
         orders_asia = F.broadcast(orders_asia)
     joined = (
         li.join(part, li.l_partkey == part.p_partkey)

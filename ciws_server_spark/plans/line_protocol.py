@@ -44,6 +44,8 @@ native column functions end-to-end.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -278,3 +280,46 @@ def typed_fields(
             )
         cols.append(c.alias(name))
     return out.select(*cols)
+
+
+def measurement_points(
+    parsed: DataFrame,
+    schemas: dict[str, dict[str, str]],
+    partition_tags: Callable[[str], list[str]],
+    time_col: str = "time",
+) -> Iterator[tuple[str, DataFrame, list[str]]]:
+    """The points body of every line-protocol arrival (``/write`` and
+    the line-protocol stream): yield ``(measurement, points,
+    tag_names)`` for each measurement of ``schemas``, in sorted order.
+
+    ``points`` holds the well-formed lines of that measurement as
+    ``time_col``, one string column per tag in ``tag_names``, then the
+    typed fields. A line with no timestamp is stamped with the arrival
+    time (InfluxDB server behavior; ``current_timestamp`` is fixed per
+    plan). Tags are the measurement's ``partition_tags`` first
+    (present even when no line carries them — partitionBy needs the
+    column), then every other tag key the batch carries for it,
+    sorted: a tag outside the partition layout is still data, never
+    silently dropped. The tag-key collect is (measurement × tag-key)
+    rows — schema-sized — and runs when the first measurement is
+    drawn, so a caller may validate names before any Spark job.
+    """
+    parsed = parsed.where(F.col("fields").isNotNull())
+    tags_by_m: dict[str, set[str]] = {}
+    for r in (
+        parsed.select("measurement", F.explode(F.map_keys("tags")).alias("k"))
+        .distinct()
+        .collect()
+    ):
+        tags_by_m.setdefault(r["measurement"], set()).add(r["k"])
+    for measurement, fields in sorted(schemas.items()):
+        part_tags = partition_tags(measurement)
+        tag_names = part_tags + sorted(
+            tags_by_m.get(measurement, set()) - set(part_tags)
+        )
+        points = typed_fields(parsed, measurement, fields).select(
+            F.coalesce(F.col("ts"), F.current_timestamp()).alias(time_col),
+            *[F.col("tags")[t].alias(t) for t in tag_names],
+            *[F.col(f) for f in fields],
+        )
+        yield measurement, points, tag_names

@@ -80,7 +80,7 @@ from ..plans.influxql import (
     run_influxql,
     statement_order_desc,
 )
-from ..plans.line_protocol import parse_lines, typed_fields
+from ..plans.line_protocol import measurement_points, parse_lines
 from . import sinks
 
 _PRECISION_NS = {
@@ -767,37 +767,11 @@ class InfluxHTTPApi:
                 sinks.validate_table(measurement)
             except ValueError as exc:
                 return 400, {"error": str(exc)}
-        # EVERY tag in the batch persists as a string column — the
-        # line-protocol contract (a tag not in the measurement's
-        # partition layout is still data, never silently dropped).
-        # The collect is (measurement × tag-key) rows: schema-sized.
-        tags_by_m: dict[str, set[str]] = {}
-        for r in (
-            parsed.select(
-                "measurement", F.explode(F.map_keys("tags")).alias("k")
-            )
-            .distinct()
-            .collect()
-        ):
-            tags_by_m.setdefault(r["measurement"], set()).add(r["k"])
         appended = 0
-        for measurement, fields in sorted(schemas.items()):
-            typed = typed_fields(parsed, measurement, fields)
-            parts = sinks.PARTITIONING.get(measurement, [])
-            # partition tags first (present even when a line omits
-            # them — partitionBy needs the column), then the rest
-            part_tags = [p for p in parts if p != "date"]
-            tag_names = part_tags + sorted(
-                tags_by_m.get(measurement, set()) - set(part_tags)
-            )
-            tag_cols = [F.col("tags")[p].alias(p) for p in tag_names]
-            pts = typed.select(
-                F.coalesce(
-                    F.col("ts"), F.current_timestamp()
-                ).alias(self.time_col),
-                *tag_cols,
-                *[F.col(f) for f in fields],
-            ).coalesce(1)
+        for measurement, pts, tag_names in measurement_points(
+            parsed, schemas, sinks.partition_tags, self.time_col
+        ):
+            pts = pts.coalesce(1)
             # ^ one output file per partition dir: a wire write is
             # HTTP-body-bounded (a few MB), so collapsing it to a
             # single task costs nothing and makes the request's
@@ -832,7 +806,7 @@ class InfluxHTTPApi:
                 table_dir=self.table_dir,
                 measurement=measurement,
                 tag_cols=tag_names,
-                field_cols=list(fields),
+                field_cols=list(schemas[measurement]),
                 time_col=self.time_col,
             )
         self._write_seq += 1

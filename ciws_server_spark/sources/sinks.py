@@ -146,6 +146,12 @@ PARTITIONING = {
 }
 
 
+def partition_tags(table: str) -> list[str]:
+    """The tag columns ``table`` is partitioned by: its layout without
+    the ``date`` level, which writers derive from ``time``."""
+    return [p for p in PARTITIONING.get(table, []) if p != "date"]
+
+
 def date_is_day_of_time(scan_root: str) -> bool:
     """Whether the table read from ``scan_root`` — its pinned
     ``<table>.vNNNNNN`` version dir, or a legacy table dir — carries
@@ -637,7 +643,7 @@ def _publish(src: str, path: str, schema, batch_id: int | None) -> None:
        longer produces, even when it produces no rows at all;
     4. rename each staged part file into place.
 
-    r14: steps 3–4 replaced Spark's ``partitionOverwriteMode=dynamic``
+    r14: steps 3–4 replaced Spark's dynamic partition overwrite
     writer, which stages to ``_temporary`` and then walks/moves
     partition DIRS driver-side — measured 2–4× slower per micro-batch
     at the ingest benchmark's file sizes. Replay convergence is also

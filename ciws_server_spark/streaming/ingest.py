@@ -251,10 +251,12 @@ def stream_line_protocol(
 
     ``schemas`` maps measurement → {field: line-protocol type}; each
     measurement must appear in sinks.PARTITIONING (or lands
-    unpartitioned). The parse is native column functions end-to-end
-    (plans/line_protocol.py), so the per-batch plan is codegen'd.
+    unpartitioned). Points take ``/write``'s body
+    (``plans.line_protocol.measurement_points``), so every tag a batch
+    carries lands as a string column. The parse is native column
+    functions end-to-end, so the per-batch plan is codegen'd.
     """
-    from ..plans.line_protocol import parse_lines, typed_fields
+    from ..plans.line_protocol import measurement_points, parse_lines
 
     reader = spark.readStream.option("pathGlobFilter", "*.lp")
     if max_files_per_trigger:
@@ -267,21 +269,9 @@ def stream_line_protocol(
     def process_batch(batch_df, batch_id: int) -> None:
         # src_file rides through the parse as a passthrough column
         parsed = parse_lines(batch_df).localCheckpoint(eager=True)
-        for measurement, fields in schemas.items():
-            typed = typed_fields(parsed, measurement, fields)
-            parts = sinks.PARTITIONING.get(measurement, [])
-            tag_cols = [
-                F.col("tags")[p].alias(p) for p in parts if p != "date"
-            ]
-            # a well-formed point with no timestamp gets stamped with
-            # the batch arrival time — the InfluxDB server's behavior
-            # — rather than silently dropped or parked in a null
-            # partition (current_timestamp is fixed per batch plan)
-            pts = typed.select(
-                F.coalesce(F.col("ts"), F.current_timestamp()).alias("time"),
-                *tag_cols,
-                *[F.col(f) for f in fields],
-            )
+        for measurement, pts, tag_names in measurement_points(
+            parsed, schemas, sinks.partition_tags
+        ):
             sinks.append_points(
                 pts, table_dir, measurement, batch_id=batch_id
             )
@@ -297,8 +287,8 @@ def stream_line_protocol(
                     batch_id,
                     table_dir=table_dir,
                     measurement=measurement,
-                    tag_cols=[p for p in parts if p != "date"],
-                    field_cols=list(fields),
+                    tag_cols=tag_names,
+                    field_cols=list(schemas[measurement]),
                     time_col="time",
                 )
         manifest = (

@@ -113,6 +113,27 @@ def test_canary_history_rejects_loaded_readings(tmp_path, monkeypatch):
     assert 0.23 in bench._canary_history()
 
 
+def test_inflated_query_reading_stays_out_of_floor_store(
+    tmp_path, monkeypatch
+):
+    """ADVICE: an unflagged sweep folded EVERY warm reading into the
+    query floors, including queries its own warm retry left
+    `inflated`, so one inflated reading ratcheted that floor upward.
+    Only the readings of queries not in `inflated` may enter."""
+    import bench
+
+    f = tmp_path / "query_floor.json"
+    monkeypatch.setattr(bench, "_QUERY_FLOOR_FILE", str(f))
+    f.write_text(json.dumps({"sf0.001c4": {"q_ok": [0.1], "q_hot": [0.1]}}))
+
+    bench.record_query_floors(
+        "sf0.001c4", {"q_ok": 0.11, "q_hot": 9.0}, False, ["q_hot"]
+    )
+    assert json.loads(f.read_text()) == {
+        "sf0.001c4": {"q_ok": [0.1, 0.11], "q_hot": [0.1]}
+    }
+
+
 def test_decade_protocol_subset_merges(tmp_path, monkeypatch):
     """tools/decade_protocol.py subset runs must MERGE into an
     existing artifact (anchors accumulate across sessions) and stamp

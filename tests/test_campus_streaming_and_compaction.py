@@ -207,12 +207,11 @@ def test_compaction_between_ingest_passes_keeps_layout(spark, tmp_path):
 
 
 def test_compaction_strictly_drops_files_and_preserves_rows(spark, tmp_path):
-    """jobs.compact_table on a table with many small files per
+    """sinks.compact_table on a table with many small files per
     partition: the file count strictly drops and the full row multiset
     (content hash) is byte-identical before and after."""
     import datetime as dt
 
-    from ciws_server_spark.jobs import compact_table
     from ciws_server_spark.sources import sinks
 
     table_dir = str(tmp_path / "tables")
@@ -238,7 +237,7 @@ def test_compaction_strictly_drops_files_and_preserves_rows(spark, tmp_path):
     )
     assert n_before >= 10
 
-    n_after = compact_table(spark, table_dir, "campus_flow")
+    n_after = sinks.compact_table(spark, table_dir, "campus_flow")
     assert n_after < n_before  # strict drop
     assert n_after == 2  # one file per (buildingID, date) partition
 

@@ -66,89 +66,6 @@ def test_all_chunks_duplicate_gives_empty_text(spark, tmp_path):
     assert rows[1]["n_kept"] == 0 and rows[1]["dedup_text"] == ""
 
 
-def _land(dirpath, fname, docs):
-    import json as _json
-
-    with open(dirpath / fname, "w") as f:
-        for d in docs:
-            f.write(_json.dumps(d) + "\n")
-
-
-def test_streaming_equals_batch_in_arrival_order(spark, tmp_path):
-    """Streaming chunk dedup over doc_id-ordered batches accumulates
-    exactly the batch operator's output on the union corpus — the
-    cross-batch duplicate is caught via the persisted chunk index."""
-    import pandas as pd
-
-    from ciws_server_spark.streaming.dedup import (
-        CHUNK_STATS_TABLE,
-        run_chunk_dedup_pass,
-    )
-
-    dup = " ".join(f"w{i}" for i in range(8))
-    texts = [
-        f"{dup} " + " ".join(f"a{i}" for i in range(8)),   # doc0: dup + uniq
-        " ".join(f"b{i}" for i in range(8)),                # doc1
-        " ".join(f"c{i}" for i in range(8)) + f" {dup}",    # doc2: dup again
-        f"{dup} {dup}",                                     # doc3: twice
-    ]
-    landing = tmp_path / "landing"
-    tables = tmp_path / "tables"
-    ckpt = str(tmp_path / "ckpt")
-    landing.mkdir(), tables.mkdir()
-
-    batches = [[0], [1, 2], [3]]
-    for bi, ids in enumerate(batches):
-        _land(
-            landing, f"b{bi}.jsonl",
-            [{"doc_id": i, "text": texts[i]} for i in ids],
-        )
-        run_chunk_dedup_pass(spark, str(landing), str(tables), ckpt)
-
-    got = sorted(
-        (
-            (r["doc_id"], r["n_chunks"], r["n_kept"], r["dedup_text"])
-            for r in spark.read.parquet(
-                str(tables / CHUNK_STATS_TABLE)
-            ).collect()
-        )
-    )
-
-    # batch reference over the union corpus
-    sf = tmp_path / "batchref"
-    sf.mkdir()
-    pd.DataFrame(
-        {
-            "doc_id": range(4),
-            "text": texts,
-            "lang": ["en"] * 4,
-            "source": ["t"] * 4,
-            "n_chars": [len(t) for t in texts],
-        }
-    ).to_parquet(sf / "documents.parquet")
-    want = sorted(
-        (r["doc_id"], r["n_chunks"], r["n_kept"], r["dedup_text"])
-        for r in pipeline_chunk_dedup(spark, str(sf)).collect()
-    )
-    assert got == want
-    # the cross-batch duplicate was actually exercised: doc2 lost its
-    # dup chunk to doc0 (different batches), doc3 lost both instances
-    by_id = {g[0]: g for g in got}
-    assert by_id[2][2] == 1 and dup not in by_id[2][3]
-    assert by_id[3] == (3, 2, 0, "")  # 16 words = 2 chunks, both dups
-
-    # replaying a completed pass with the same checkpoint is a no-op
-    before = got
-    run_chunk_dedup_pass(spark, str(landing), str(tables), ckpt)
-    after = sorted(
-        (r["doc_id"], r["n_chunks"], r["n_kept"], r["dedup_text"])
-        for r in spark.read.parquet(
-            str(tables / CHUNK_STATS_TABLE)
-        ).collect()
-    )
-    assert after == before
-
-
 def test_unigram_logprob_hand_computed(spark, tmp_path):
     """Corpus 'a a a b': p(a)=3/4, p(b)=1/4. doc0='a a' → 2·log2(4/3)
     / 2; doc1='a b' → (log2(4/3)+log2(4))/2."""

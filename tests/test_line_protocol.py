@@ -1,6 +1,7 @@
-"""InfluxDB line-protocol parser + ingest job (plans/line_protocol.py,
-jobs.ingest_line_protocol) — the reference's S8 write format accepted
-as text (transfer_manager.py:123-164 writes it via the client lib)."""
+"""InfluxDB line-protocol parser and its two arrival paths
+(plans/line_protocol.py; ``/write`` and the line-protocol stream) — the
+reference's S8 write format accepted as text (transfer_manager.py:123-164
+writes it via the client lib)."""
 
 from __future__ import annotations
 
@@ -82,7 +83,7 @@ def test_typed_projection(parsed):
 
 
 def test_ingest_job_routes_to_partitioned_table(spark, tmp_path):
-    from ciws_server_spark.jobs import ingest_line_protocol
+    from ciws_server_spark.streaming.ingest import run_line_protocol_pass
 
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -92,24 +93,29 @@ def test_ingest_job_routes_to_partitioned_table(spark, tmp_path):
         "campus_flow,buildingID=B hotOutFlowRate=0.5,coldInFlowRate=1.0 "
         "1614643260000000000\n"
         "garbage line without fields\n"
+        "campus_flow,buildingID=C hotOutFlowRate\n"  # no field value
     )
-    counts = ingest_line_protocol(
+    tables = tmp_path / "tables"
+    run_line_protocol_pass(
         spark,
         str(landing),
-        str(tmp_path / "tables"),
+        str(tables),
+        str(tmp_path / "ckpt"),
         {"campus_flow": {"hotOutFlowRate": "float",
                          "coldInFlowRate": "float"}},
     )
-    assert counts == {"_malformed": 1, "campus_flow": 2}
-    out = spark.read.parquet(str(tmp_path / "tables" / "campus_flow"))
+    out = spark.read.parquet(str(tables / "campus_flow"))
     rows = {r["buildingID"]: r for r in out.collect()}
+    assert len(rows) == 2 and out.count() == 2
     assert rows["A"]["hotOutFlowRate"] == 1.5
     assert rows["B"]["date"] == dt.date(2021, 3, 2)  # day partition
     # tag+date partition directories exist (pruning layout, S8)
     assert os.path.isdir(
-        str(tmp_path / "tables" / "campus_flow" / "buildingID=A"
-            / "date=2021-03-01")
+        str(tables / "campus_flow" / "buildingID=A" / "date=2021-03-01")
     )
+    # malformed lines land no point; they quarantine their source file
+    q = spark.read.parquet(str(tables / "quarantine_files")).collect()
+    assert [r["src_file"].endswith("batch1.lp") for r in q] == [True]
 
 
 def test_parser_stays_codegen(spark, parsed):
@@ -192,45 +198,35 @@ def test_render_roundtrip(spark):
 
 
 def test_export_import_cycle(spark, tmp_path):
-    """ingest .lp → partitioned table → export .lp → re-ingest: the
-    second table equals the first (full format symmetry)."""
-    from ciws_server_spark.jobs import (
-        export_line_protocol,
-        ingest_line_protocol,
-    )
+    """/write → partitioned table → render_lines → /write: the second
+    table equals the first (full format symmetry)."""
+    from ciws_server_spark.plans.line_protocol import render_lines
+    from ciws_server_spark.sources.http_api import InfluxHTTPApi
 
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "a.lp").write_text(
-        "campus_flow,buildingID=A hotOutFlowRate=1.5 1614556800000000000\n"
-        "campus_flow,buildingID=B hotOutFlowRate=2.5 1614643260000000000\n"
+    body = (
+        b"campus_flow,buildingID=A hotOutFlowRate=1.5 1614556800000000000\n"
+        b"campus_flow,buildingID=B hotOutFlowRate=2.5 1614643260000000000\n"
     )
-    schemas = {"campus_flow": {"hotOutFlowRate": "float"}}
-    ingest_line_protocol(spark, str(landing), str(tmp_path / "t1"), schemas)
+    t1, t2 = str(tmp_path / "t1"), str(tmp_path / "t2")
+    assert InfluxHTTPApi(spark, t1).handle_write({}, body) == (204, None)
 
-    n = export_line_protocol(
-        spark,
-        str(tmp_path / "t1"),
-        "campus_flow",
-        str(tmp_path / "export"),
-        ["buildingID"],
-        ["hotOutFlowRate"],
-    )
-    assert n == 2
+    first = spark.read.parquet(os.path.join(t1, "campus_flow"))
+    lines = [
+        r["line"]
+        for r in render_lines(
+            first, "campus_flow", ["buildingID"], ["hotOutFlowRate"]
+        ).collect()
+    ]
+    assert len(lines) == 2
+    rendered = "\n".join(lines).encode()
+    assert InfluxHTTPApi(spark, t2).handle_write({}, rendered) == (204, None)
 
-    ingest_line_protocol(
-        spark, str(tmp_path / "export"), str(tmp_path / "t2"), schemas,
-    )
     k = lambda r: (r["buildingID"], str(r["time"]))  # noqa: E731
-    t1 = sorted(
-        spark.read.parquet(str(tmp_path / "t1" / "campus_flow")).collect(),
-        key=k,
+    rows1 = sorted(first.collect(), key=k)
+    rows2 = sorted(
+        spark.read.parquet(os.path.join(t2, "campus_flow")).collect(), key=k
     )
-    t2 = sorted(
-        spark.read.parquet(str(tmp_path / "t2" / "campus_flow")).collect(),
-        key=k,
-    )
-    assert [tuple(r) for r in t1] == [tuple(r) for r in t2]
+    assert [r.asDict() for r in rows1] == [r.asDict() for r in rows2]
 
 
 def test_duplicate_keys_last_win_not_exception(spark):
@@ -284,45 +280,82 @@ def test_render_null_tags_and_all_null_fields(spark):
 
 def test_missing_timestamp_stamped_with_arrival_time(spark, tmp_path):
     """A well-formed point with no timestamp is stamped with the
-    ingest arrival time (InfluxDB server behavior) in BOTH the batch
-    and the streaming path — never silently dropped, never written to
-    a null time/date partition."""
-    import datetime as dt
-
-    from ciws_server_spark.jobs import ingest_line_protocol
+    arrival time (InfluxDB server behavior) on BOTH arrival paths —
+    ``/write`` and the streaming pass — never silently dropped, never
+    written to a null time/date partition."""
+    from ciws_server_spark.sources.http_api import InfluxHTTPApi
     from ciws_server_spark.streaming.ingest import run_line_protocol_pass
 
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "a.lp").write_text(
+    body = (
         "campus_flow,buildingID=A hotOutFlowRate=1.0 1614556800000000000\n"
         "campus_flow,buildingID=B hotOutFlowRate=2.0\n"  # no timestamp
     )
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "a.lp").write_text(body)
     schemas = {"campus_flow": {"hotOutFlowRate": "float"}}
 
     before = dt.datetime.now() - dt.timedelta(minutes=5)
-    counts = ingest_line_protocol(
-        spark, str(landing), str(tmp_path / "batch"), schemas
-    )
-    assert counts["campus_flow"] == 2
-    rows = {
-        r["buildingID"]: r
-        for r in spark.read.parquet(
-            str(tmp_path / "batch" / "campus_flow")
-        ).collect()
-    }
-    assert rows["A"]["time"] == dt.datetime(2021, 3, 1, 0, 0)
-    assert rows["B"]["time"] is not None and rows["B"]["time"] > before
-
+    api = InfluxHTTPApi(spark, str(tmp_path / "write"))
+    assert api.handle_write({}, body.encode()) == (204, None)
     run_line_protocol_pass(
         spark, str(landing), str(tmp_path / "stream"),
         str(tmp_path / "ckpt"), schemas,
     )
-    srows = {
-        r["buildingID"]: r
-        for r in spark.read.parquet(
-            str(tmp_path / "stream" / "campus_flow")
-        ).collect()
-    }
-    assert srows["A"]["time"] == dt.datetime(2021, 3, 1, 0, 0)
-    assert srows["B"]["time"] is not None and srows["B"]["time"] > before
+    for side in ("write", "stream"):
+        rows = {
+            r["buildingID"]: r
+            for r in spark.read.parquet(
+                str(tmp_path / side / "campus_flow")
+            ).collect()
+        }
+        assert rows["A"]["time"] == dt.datetime(2021, 3, 1, 0, 0), side
+        assert rows["B"]["time"] is not None, side
+        assert rows["B"]["time"] > before, side
+
+
+def test_write_and_stream_arrivals_agree(spark, tmp_path):
+    """One body through ``/write`` and through the line-protocol
+    stream lands the same tables: same columns (the stream adds only
+    its ``batch_id`` level), same rows. A non-partition tag (``room``)
+    is a string column on both paths; only the arrival stamp of the
+    line with no timestamp may differ."""
+    from ciws_server_spark.sources.http_api import InfluxHTTPApi
+    from ciws_server_spark.streaming.ingest import run_line_protocol_pass
+
+    body = (
+        "campus_flow,buildingID=A,room=r1 hotOutFlowRate=1.5 "
+        "1614556800000000000\n"
+        "campus_flow,buildingID=B hotOutFlowRate=2.5\n"  # no timestamp
+        "raw_data,siteID=S1 pulses=3i 1614556800000000000\n"
+    )
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "a.lp").write_text(body)
+    before = dt.datetime.now() - dt.timedelta(minutes=5)
+    api = InfluxHTTPApi(spark, str(tmp_path / "write"))
+    assert api.handle_write({}, body.encode()) == (204, None)
+    run_line_protocol_pass(
+        spark, str(landing), str(tmp_path / "stream"), str(tmp_path / "ckpt"),
+        {"campus_flow": {"hotOutFlowRate": "float"},
+         "raw_data": {"pulses": "integer"}},
+    )
+
+    def table(side, name):
+        df = spark.read.parquet(str(tmp_path / side / name))
+        rows = []
+        for r in df.collect():
+            d = r.asDict()
+            d.pop("batch_id", None)
+            if d["time"] > before:  # arrival-stamped: time and its day
+                d["time"] = d["date"] = "arrival"
+            rows.append(d)
+        cols = [c for c in df.columns if c != "batch_id"]
+        return cols, sorted(rows, key=lambda d: sorted(map(str, d.items())))
+
+    for name in ("campus_flow", "raw_data"):
+        assert table("write", name) == table("stream", name), name
+    cols, rows = table("stream", "campus_flow")
+    assert "room" in cols
+    assert {d["buildingID"]: d["room"] for d in rows} == {"A": "r1", "B": None}
+    assert [d["time"] for d in rows if d["buildingID"] == "B"] == ["arrival"]

@@ -1,29 +1,24 @@
 """Cron-crash-cron chaos sequence (round-8 verdict ask).
 
 The per-surface recovery tests (test_streaming_ingest,
-test_campus_streaming_and_compaction, test_streaming_neardup) each
-kill ONE mechanism at one point. This test drives the three surfaces
-IN SEQUENCE the way a real deployment fails: a pass dies mid-batch
-with the checkpoint intact, the next cron run must heal it, and the
-next surface then operates on the healed state.
+test_campus_streaming_and_compaction) each kill ONE mechanism at one
+point. This test drives the two surfaces IN SEQUENCE the way a real
+deployment fails: a pass dies mid-batch with the checkpoint intact,
+the next cron run must heal it, and the next surface then operates on
+the healed state.
 
 Kill points chosen to leave the nastiest intermediate states:
 * ingest — between the raw_data and qc_data writes of one batch
   (half-applied batch, nothing committed);
 * compaction — between the two swap renames (NO live table directory
-  on disk);
-* near-dup — between the pairs write and the index write of a
-  growing-index batch (pairs visible, index stale, uncommitted).
+  on disk).
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
-
-from pyspark.sql import functions as F
 
 CSV_RAW = """Site #: 0042
 Datalogger #: 0007
@@ -58,9 +53,8 @@ def _counts(spark, table_dir):
     return out
 
 
-def test_cron_crash_cron_across_all_three_surfaces(spark, tmp_path):
+def test_cron_crash_cron_across_ingest_and_compaction(spark, tmp_path):
     from ciws_server_spark.sources import sinks
-    from ciws_server_spark.streaming import dedup as sdedup
     from ciws_server_spark.streaming.ingest import run_ingest_pass
 
     landing = tmp_path / "landing"
@@ -174,106 +168,3 @@ def test_cron_crash_cron_across_all_three_surfaces(spark, tmp_path):
         for r in spark.read.parquet(root).drop("batch_id").collect()
     }
     assert after == before  # exactly-once content through kill+compact
-
-    # ---- phase 3: near-dup growing-index pass killed between the ---
-    # ---- pairs write and the index write ---------------------------
-    nd_landing = tmp_path / "nd_landing"
-    nd_landing.mkdir()
-    nd_tables = str(tmp_path / "nd_tables")
-    nd_ckpt = str(tmp_path / "nd_ckpt")
-    corpus = spark.createDataFrame(
-        [
-            (0, "the quick brown fox jumps over the lazy dog tonight"),
-            (1, "completely different corpus text with other words"),
-        ],
-        "doc_id BIGINT, text STRING",
-    )
-
-    def land(name, rows):
-        with open(nd_landing / name, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-    # batch 1: one near-dup of corpus doc 0, one novel doc (clean pass)
-    land("b1.json", [
-        # near-dup of corpus doc 0 (Jaccard 8/9 ≈ 0.89; collides in 3
-        # of the 4 LSH bands under the r15 independent (a_k, b_k)
-        # minhash family — the old "today" variant's 7/9 pair was a
-        # coin-flip candidate that only the degenerate pre-r15 family
-        # happened to catch)
-        {"doc_id": 100,
-         "text": "the quick brown fox jumps over the lazy dog tonight again"},
-        {"doc_id": 101, "text": "novel unique sentence about spark plans"},
-    ])
-    sdedup.run_near_dup_pass(
-        spark, str(nd_landing), corpus, nd_tables, nd_ckpt, grow_index=True
-    )
-
-    # batch 2: a dup of kept doc 101 plus a novel doc — killed between
-    # the pairs write and the index write
-    land("b2.json", [
-        {"doc_id": 200,
-         "text": "novel unique sentence about spark plans indeed"},
-        {"doc_id": 201, "text": "fresh standalone document body here"},
-    ])
-    real_ow = sdedup._overwrite_by_batch
-    state = {"writes": 0}
-
-    def ow_then_die(df, path, batch_id):
-        real_ow(df, path, batch_id)
-        state["writes"] += 1
-        if state["writes"] == 1:  # pairs landed; die before index write
-            raise RuntimeError("injected mid-batch kill (near-dup)")
-
-    sdedup._overwrite_by_batch = ow_then_die
-    try:
-        with pytest.raises(Exception, match="injected mid-batch kill"):
-            sdedup.run_near_dup_pass(
-                spark, str(nd_landing), corpus, nd_tables, nd_ckpt,
-                grow_index=True,
-            )
-    finally:
-        sdedup._overwrite_by_batch = real_ow
-
-    # heal: the replayed batch must converge pairs AND write the index
-    sdedup.run_near_dup_pass(
-        spark, str(nd_landing), corpus, nd_tables, nd_ckpt, grow_index=True
-    )
-    pairs = spark.read.parquet(os.path.join(nd_tables, sdedup.NEAR_DUP_TABLE))
-    got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
-    assert (100, 0) in got      # batch-1 vs corpus
-    assert (200, 101) in got    # batch-2 vs batch-1 kept doc (index!)
-    # exactly-once: no pair row appears twice after the replay
-    assert pairs.count() == pairs.distinct().count()
-    dup_rows = (
-        pairs.groupBy("doc_a", "doc_b").count().where(F.col("count") > 1)
-    )
-    assert dup_rows.count() == 0
-
-    # index consistency: every kept doc appears in the index exactly
-    # once per band; the duplicate (200) and near-dup (100) never enter
-    idx = spark.read.parquet(os.path.join(nd_tables, sdedup.INDEX_TABLE))
-    per_doc = {
-        r["doc_id"]: r["n"]
-        for r in idx.groupBy("doc_id").agg(F.count("*").alias("n")).collect()
-    }
-    from ciws_server_spark.operators.dedup import _BANDS
-
-    assert set(per_doc) == {101, 201}
-    assert all(n == _BANDS for n in per_doc.values())
-
-    # batch 3: a dup of batch-2's kept doc proves the healed index
-    # serves later batches
-    land("b3.json", [
-        {"doc_id": 300, "text": "fresh standalone document body here too"},
-    ])
-    sdedup.run_near_dup_pass(
-        spark, str(nd_landing), corpus, nd_tables, nd_ckpt, grow_index=True
-    )
-    got = {
-        (r["doc_a"], r["doc_b"])
-        for r in spark.read.parquet(
-            os.path.join(nd_tables, sdedup.NEAR_DUP_TABLE)
-        ).collect()
-    }
-    assert (300, 201) in got

@@ -103,3 +103,5 @@ def test_campus_lifecycle_files_to_derived_table(spark, tmp_path):
     run_derived_pass(spark, table_dir, ckpt)
     rows = sorted(spark.read.parquet(derived).collect(), key=lambda r: r["time"])
     assert [r["hotOutFlowRate"] for r in rows] == [1.0, round(60.0 / 121, 6)]
+    # partition layout: buildingID + date
+    assert os.path.isdir(os.path.join(derived, "buildingID=E"))

@@ -7,13 +7,13 @@ spark = (SparkSession.builder.master("local[32]")
          .config("spark.driver.memory", "24g").appName("simhash-ab").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 from ciws_server_spark.operators import dedup
-from ciws_server_spark.operators.dedup import _SIMHASH_BITS, _spread_if_few_splits
+from ciws_server_spark.operators.dedup import _SIMHASH_BITS
 from ciws_server_spark.functions.text import tokens
-from ciws_server_spark.tables import table
+from ciws_server_spark.tables import spread_if_few_splits, table
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
 def simhash_new(spark, sf_dir):
-    docs = _spread_if_few_splits(spark, table(spark, sf_dir, "documents"))
+    docs = spread_if_few_splits(spark, table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", F.explode(F.array_distinct(tokens("text"))).alias("w")
     ).withColumn(

@@ -22,9 +22,8 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 
 from ciws_server_spark.operators import dedup
-from ciws_server_spark.operators.dedup import _conf_bytes
 from ciws_server_spark.session import get_spark
-from ciws_server_spark.tables import table
+from ciws_server_spark.tables import conf_bytes, input_bytes, table
 
 VARIANT = sys.argv[1]
 SF_DIR = sys.argv[2] if len(sys.argv) > 2 else "tmp/sf10"
@@ -35,8 +34,8 @@ def forced_query(spark, sf_dir, strategy):
     operator's own parallelism spread preserved."""
     docs = table(spark, sf_dir, "documents")
     cores = spark.sparkContext.defaultParallelism
-    mpb = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
-    splits = math.ceil(max(dedup._input_bytes(docs), 1) / max(mpb, 1))
+    mpb = conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
+    splits = math.ceil(max(input_bytes(docs), 1) / max(mpb, 1))
     src = docs.repartition("doc_id") if splits < cores else docs
     bands = dedup.band_signatures(src, strategy=strategy).localCheckpoint(
         eager=True

@@ -144,37 +144,6 @@ def main() -> None:
         except Exception as e:  # pragma: no cover
             out.append(f"### {name}\n\nERROR: {e}\n")
 
-    # Streaming near-dup candidate generation (the plan every
-    # micro-batch runs inside foreachBatch): batch-side signatures
-    # broadcast into the static corpus LSH index — per-batch cost is
-    # O(batch × bucket collisions), independent of corpus row count.
-    # (The verify stage is excluded here: it starts from eagerly
-    # materialized candidates, so its upstream would show as
-    # ExistingRDD and the scan/exchange counts would be meaningless.)
-    from pyspark.sql import functions as F
-
-    from ciws_server_spark.operators.dedup import band_signatures
-    from ciws_server_spark.tables import table as _table
-
-    corpus = _table(spark, SF_DIR, "documents").select("doc_id", "text")
-    new_docs = corpus.limit(3).select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text"
-    )
-    idx = band_signatures(corpus)
-    sig_new = band_signatures(new_docs).select(
-        F.col("doc_id").alias("doc_a"), "band", "band_hash"
-    )
-    cand = (
-        F.broadcast(sig_new)
-        .join(
-            idx.select(F.col("doc_id").alias("doc_b"), "band", "band_hash"),
-            ["band", "band_hash"],
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    out.append(audit("streaming_neardup_candidates", cand))
-
     # ts-pushdown evidence: the headline ts_* queries scan the full
     # events table by design (no time predicate to push); audit the
     # range-predicate shape separately so the µs-era pushdown is

@@ -39,7 +39,15 @@ it artificially:
   sign construction replicates cluster structure ×N instead, the
   same philosophy as the documents rule above.
 
-Usage: python tools/gen_sf_scale.py [factor] [out_dir]
+Row ORDER is not reproducible. The generator runs DuckDB with
+``SET preserve_insertion_order=false`` (it streams each COPY instead
+of buffering whole tables), so two regenerations of one factor hold
+the same rows in different file orders. Pin only order-insensitive
+checks against a regenerated directory: counts, sums, sorted or
+hashed multisets. Never pin a first-N row, a ``limit`` without a total
+order, or a value that depends on scan order.
+
+Usage:python tools/gen_sf_scale.py [factor] [out_dir]
        (defaults: 10 → ./tmp/sf1)
 """
 
