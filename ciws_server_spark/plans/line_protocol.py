@@ -45,6 +45,7 @@ native column functions end-to-end.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -241,6 +242,26 @@ def render_lines(
     ).where(F.col("_body") != "").select("line")
 
 
+#: The line-protocol value syntax of each non-float field type — the
+#: one type rule: ``field_type`` classifies a raw value by it and
+#: ``typed_fields`` converts by it.
+_INTEGER = r"^-?\d+i$"
+_STRING = r'^".*"$'
+_BOOLEAN = ("t", "true", "f", "false")
+
+
+def field_type(raw: Column) -> Column:
+    """The line-protocol type of a raw field value: ``integer`` (``1i``),
+    ``string`` (``"quoted"``), ``boolean`` (``t``/``true``/``f``/
+    ``false``, any case) or ``float`` (anything else)."""
+    return (
+        F.when(raw.rlike(_INTEGER), "integer")
+        .when(raw.rlike(_STRING), "string")
+        .when(F.lower(raw).isin(*_BOOLEAN), "boolean")
+        .otherwise("float")
+    )
+
+
 def typed_fields(
     parsed: DataFrame, measurement: str, fields: dict[str, str]
 ) -> DataFrame:
@@ -256,21 +277,21 @@ def typed_fields(
         raw = F.col("fields")[name]
         if ftype == "integer":
             c = F.when(
-                raw.rlike("^-?\\d+i$"),
+                raw.rlike(_INTEGER),
                 F.expr(
                     f"try_cast(rtrim('i', fields['{name}']) AS BIGINT)"
                 ),
             )
         elif ftype == "string":
             c = F.when(
-                raw.rlike('^".*"$'),
+                raw.rlike(_STRING),
                 F.regexp_replace(
                     F.regexp_extract(raw, '^"(.*)"$', 1), '\\\\"', '"'
                 ),
             )
         elif ftype == "boolean":
             c = F.when(
-                F.lower(raw).isin("t", "true", "f", "false"),
+                F.lower(raw).isin(*_BOOLEAN),
                 F.lower(raw).isin("t", "true"),
             )
         else:  # float
@@ -282,9 +303,78 @@ def typed_fields(
     return out.select(*cols)
 
 
+class FieldTypeConflict(ValueError):
+    """One field written with two line-protocol types in one body."""
+
+
+class BodyShape(NamedTuple):
+    """What one aggregate over a parsed body reports (:func:`body_shape`).
+
+    ``bad`` counts malformed lines; ``field_types`` maps measurement →
+    field → the set of line-protocol types its values were written as;
+    ``tag_keys`` maps measurement → every tag key it carries. Both maps
+    cover well-formed lines only."""
+
+    bad: int
+    field_types: dict[str, dict[str, set[str]]]
+    tag_keys: dict[str, set[str]]
+
+    def schemas(self) -> dict[str, dict[str, str]]:
+        """measurement → field → type, fields in name order. A field
+        written with two types in one body raises
+        :class:`FieldTypeConflict`, as upstream rejects cross-type
+        writes."""
+        out: dict[str, dict[str, str]] = {}
+        for m, fields in sorted(self.field_types.items()):
+            for k, types in sorted(fields.items()):
+                if len(types) > 1:
+                    a, b, *_ = sorted(types)
+                    raise FieldTypeConflict(
+                        f"field type conflict: {m}.{k} written as both"
+                        f" {a} and {b}"
+                    )
+                out.setdefault(m, {})[k] = next(iter(types))
+        return out
+
+
+def body_shape(parsed: DataFrame) -> BodyShape:
+    """Bad-line count, field types and tag keys of a ``parse_lines``
+    frame, in ONE aggregate. Each well-formed line contributes its
+    measurement with its sorted (field, type) pairs and its sorted tag
+    keys; ``collect_set`` keeps one copy of each distinct line shape,
+    so the result is schema-sized, never point-sized. The aggregate
+    needs no shuffle when ``parsed`` is one partition (a ``/write``
+    body)."""
+    ok = F.col("fields").isNotNull()
+    typed = F.array_sort(
+        F.transform(
+            F.map_entries("fields"),
+            lambda e: F.struct(
+                e["key"].alias("k"), field_type(e["value"]).alias("t")
+            ),
+        )
+    )
+    row = parsed.agg(
+        F.count_if(~ok).alias("bad"),
+        F.collect_set(F.when(ok, F.struct("measurement", typed))).alias("f"),
+        F.collect_set(
+            F.when(ok, F.struct("measurement", F.array_sort(F.map_keys("tags"))))
+        ).alias("t"),
+    ).collect()[0]
+    field_types: dict[str, dict[str, set[str]]] = {}
+    for m, pairs in row["f"]:
+        for k, t in pairs:
+            field_types.setdefault(m, {}).setdefault(k, set()).add(t)
+    tag_keys: dict[str, set[str]] = {}
+    for m, keys in row["t"]:
+        tag_keys.setdefault(m, set()).update(keys or ())
+    return BodyShape(int(row["bad"]), field_types, tag_keys)
+
+
 def measurement_points(
     parsed: DataFrame,
     schemas: dict[str, dict[str, str]],
+    tag_keys: dict[str, set[str]],
     partition_tags: Callable[[str], list[str]],
     time_col: str = "time",
 ) -> Iterator[tuple[str, DataFrame, list[str]]]:
@@ -298,24 +388,15 @@ def measurement_points(
     time (InfluxDB server behavior; ``current_timestamp`` is fixed per
     plan). Tags are the measurement's ``partition_tags`` first
     (present even when no line carries them — partitionBy needs the
-    column), then every other tag key the batch carries for it,
-    sorted: a tag outside the partition layout is still data, never
-    silently dropped. The tag-key collect is (measurement × tag-key)
-    rows — schema-sized — and runs when the first measurement is
-    drawn, so a caller may validate names before any Spark job.
+    column), then every other key of ``tag_keys`` (the batch's
+    :func:`body_shape`) for it, sorted: a tag outside the partition
+    layout is still data, never silently dropped. Runs no Spark job.
     """
     parsed = parsed.where(F.col("fields").isNotNull())
-    tags_by_m: dict[str, set[str]] = {}
-    for r in (
-        parsed.select("measurement", F.explode(F.map_keys("tags")).alias("k"))
-        .distinct()
-        .collect()
-    ):
-        tags_by_m.setdefault(r["measurement"], set()).add(r["k"])
     for measurement, fields in sorted(schemas.items()):
         part_tags = partition_tags(measurement)
         tag_names = part_tags + sorted(
-            tags_by_m.get(measurement, set()) - set(part_tags)
+            tag_keys.get(measurement, set()) - set(part_tags)
         )
         points = typed_fields(parsed, measurement, fields).select(
             F.coalesce(F.col("ts"), F.current_timestamp()).alias(time_col),

@@ -65,6 +65,7 @@ import time
 from datetime import date, datetime, timedelta, timezone
 from decimal import Decimal
 
+import pyarrow as pa
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException, PySparkException
 from pyspark.errors.exceptions.captured import (
@@ -80,7 +81,12 @@ from ..plans.influxql import (
     run_influxql,
     statement_order_desc,
 )
-from ..plans.line_protocol import measurement_points, parse_lines
+from ..plans.line_protocol import (
+    FieldTypeConflict,
+    body_shape,
+    measurement_points,
+    parse_lines,
+)
 from . import sinks
 
 _PRECISION_NS = {
@@ -746,18 +752,21 @@ class InfluxHTTPApi:
             return 400, {"error": str(exc)}
         if not lines:
             return 400, {"error": "empty write body"}
+        # an Arrow table is a local relation: the body reaches the JVM
+        # without a Python worker, and one partition lets the shape
+        # aggregate run without a shuffle
         raw = self.spark.createDataFrame(
-            [(s,) for s in lines], "value string"
-        )
+            pa.table({"value": pa.array(lines, pa.string())})
+        ).coalesce(1)
         parsed = parse_lines(raw).localCheckpoint(eager=True)
-        bad = parsed.where(F.col("fields").isNull()).count()
-        if bad:
+        shape = body_shape(parsed)
+        if shape.bad:
             return 400, {
-                "error": f"unable to parse {bad} line(s) of line protocol"
+                "error": f"unable to parse {shape.bad} line(s) of line protocol"
             }
         try:
-            schemas = self._infer_schemas(parsed)
-        except InfluxQLError as exc:
+            schemas = shape.schemas()
+        except FieldTypeConflict as exc:
             return 400, {"error": str(exc)}
         for measurement in schemas:
             try:
@@ -769,7 +778,8 @@ class InfluxHTTPApi:
                 return 400, {"error": str(exc)}
         appended = 0
         for measurement, pts, tag_names in measurement_points(
-            parsed, schemas, sinks.partition_tags, self.time_col
+            parsed, schemas, shape.tag_keys, sinks.partition_tags,
+            self.time_col,
         ):
             pts = pts.coalesce(1)
             # ^ one output file per partition dir: a wire write is
@@ -832,43 +842,6 @@ class InfluxHTTPApi:
             if mult != 1:
                 return f"{head} {ns}"
         return line
-
-    def _infer_schemas(self, parsed) -> dict[str, dict[str, str]]:
-        """(measurement, field) → line-protocol type, inferred from
-        value syntax; conflicting syntaxes are a named error, as
-        upstream rejects cross-type writes. Distributed classify +
-        distinct; the collect is (measurement × field × type) rows —
-        schema-sized, never point-sized."""
-        cls = (
-            parsed.select(
-                "measurement", F.explode("fields").alias("k", "v")
-            )
-            .select(
-                "measurement",
-                "k",
-                F.when(F.col("v").rlike(r"^-?\d+i$"), "integer")
-                .when(F.col("v").rlike(r'^".*"$'), "string")
-                .when(
-                    F.lower("v").isin("t", "true", "f", "false"),
-                    "boolean",
-                )
-                .otherwise("float")
-                .alias("t"),
-            )
-            .distinct()
-            .collect()
-        )
-        schemas: dict[str, dict[str, str]] = {}
-        for r in cls:
-            seen = schemas.setdefault(r["measurement"], {})
-            if r["k"] in seen and seen[r["k"]] != r["t"]:
-                raise InfluxQLError(
-                    f"field type conflict: {r['measurement']}."
-                    f"{r['k']} written as both {seen[r['k']]} "
-                    f"and {r['t']}"
-                )
-            seen[r["k"]] = r["t"]
-        return schemas
 
 
 def serve(api: InfluxHTTPApi, host: str = "127.0.0.1", port: int = 0):

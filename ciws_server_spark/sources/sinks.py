@@ -688,9 +688,11 @@ def route_residential(
     each subtree is published into raw_data / qc_data — the earlier
     two filtered appends paid two full write jobs per ingest pass.
     Table contents are those of two ``append_points`` calls. Route
-    counts are observed on the write job itself (``df.observe``), so
-    the whole pass is 3 Spark jobs: points write, manifests write,
-    moves. A route with no rows is published only into a table that
+    counts are observed on the write job itself (``df.observe``).
+    Traced, a one-batch ``run_ingest_pass`` is 6 Spark jobs: the
+    per-file metadata aggregate (2 under AQE) and its broadcast, this
+    points write, the manifests write and the moves' manifest read.
+    A route with no rows is published only into a table that
     already exists — a replay must still wipe its ``batch_id=N``
     leaves there, but it creates no empty table."""
     from pyspark.sql import Observation
@@ -780,20 +782,6 @@ def append_quarantine_manifest(
     _append_manifests(manifest, table_dir, batch_id, include_ingest=False)
 
 
-def _move_one(
-    src_file: str, quarantine_reason, archive_dir: str, quarantine_dir: str
-) -> str:
-    """Move one landed file; returns the outcome bucket. A missing
-    source means an earlier pass already moved it → ``skipped``."""
-    # _metadata.file_path is a URI: file:/x, file:///x both occur
-    src = re.sub(r"^file:(//)?", "", src_file)
-    if not os.path.exists(src):
-        return "skipped"
-    dest = quarantine_dir if quarantine_reason else archive_dir
-    shutil.move(src, os.path.join(dest, os.path.basename(src)))
-    return "quarantine" if quarantine_reason else "archive"
-
-
 def apply_pending_moves(
     spark, table_dir: str, archive_dir: str, quarantine_dir: str
 ) -> dict:
@@ -804,76 +792,45 @@ def apply_pending_moves(
     Idempotent — already-moved files are skipped; a crash mid-moves is
     healed by the next call.
 
-    Moves run EXECUTOR-SIDE (``mapInPandas`` over the manifest, one
-    task per partition): at 100 TB ingest cadence the manifest is
-    millions of file names per day, and a driver collect+loop would
-    serialize every rename through one process. Each file appears in
-    exactly one task (the manifest is deduped on ``src_file``
-    first), so no two executors race on one rename; only the 3-number
-    per-partition tally is collected. Requires the landing/archive
-    paths be visible from executors — true in local mode and on any
-    shared-fs/object-store deployment, the same assumption the scan
-    itself makes. It is rename metadata, not data motion.
+    The manifest is read under its registered schema (no footer-sweep
+    job) and collected: one row per landed file, the same file names
+    the stream's file source already holds in driver memory. Rows are
+    deduped on ``src_file`` here — a file quarantined in any batch
+    stays quarantined — and the renames run on the driver
+    (:func:`move_files`): rename metadata, not data motion, and no
+    Python worker per pass.
     """
-    path = os.path.join(table_dir, "ingest_manifest")
-    if not os.path.isdir(path):
+    if not os.path.isdir(os.path.join(table_dir, "ingest_manifest")):
         return {"archive": 0, "quarantine": 0, "skipped": 0}
-    manifest = (
-        spark.read.parquet(path)
-        .groupBy("src_file")
-        .agg(F.max("quarantine_reason").alias("quarantine_reason"))
-    )
-    a_dir, q_dir = archive_dir, quarantine_dir
-
-    def mover(batches):
-        import pandas as pd
-
-        counts = {"archive": 0, "quarantine": 0, "skipped": 0}
-        os.makedirs(a_dir, exist_ok=True)
-        os.makedirs(q_dir, exist_ok=True)
-        for pdf in batches:
-            for src_file, reason in zip(
-                pdf["src_file"], pdf["quarantine_reason"]
-            ):
-                counts[_move_one(src_file, reason, a_dir, q_dir)] += 1
-        yield pd.DataFrame([counts])
-
-    totals = (
-        manifest.mapInPandas(
-            mover, "archive BIGINT, quarantine BIGINT, skipped BIGINT"
-        )
-        .groupBy()
-        .sum("archive", "quarantine", "skipped")
-        .collect()[0]
-    )
-    return {
-        "archive": int(totals[0] or 0),
-        "quarantine": int(totals[1] or 0),
-        "skipped": int(totals[2] or 0),
-    }
+    reasons: dict[str, str | None] = {}
+    for src_file, reason in (
+        read_table(spark, table_dir, "ingest_manifest")
+        .select("src_file", "quarantine_reason")
+        .collect()
+    ):
+        reasons[src_file] = reasons.get(src_file) or reason
+    return move_files(reasons.items(), archive_dir, quarantine_dir)
 
 
-def move_files(manifest_rows: list, archive_dir: str, quarantine_dir: str) -> dict:
-    """Move each landed (already-collected) manifest row's file.
-
-    Driver-side form for the single-shot batch jobs whose manifests
-    are small and already on the driver; the streaming path
-    (``apply_pending_moves``) distributes the same per-file logic to
-    executors. Missing sources count as ``skipped`` (already moved by
-    an earlier pass), making re-runs idempotent.
+def move_files(manifest_rows, archive_dir: str, quarantine_dir: str) -> dict:
+    """Move the landed file of each (``src_file``,
+    ``quarantine_reason``) manifest row into the archive dir, or with
+    a reason into the quarantine dir, on the driver. Missing sources
+    count as ``skipped`` (already moved by an earlier pass), making
+    re-runs idempotent.
     """
     os.makedirs(archive_dir, exist_ok=True)
     os.makedirs(quarantine_dir, exist_ok=True)
     moved = {"archive": 0, "quarantine": 0, "skipped": 0}
-    for row in manifest_rows:
-        moved[
-            _move_one(
-                row["src_file"],
-                row["quarantine_reason"],
-                archive_dir,
-                quarantine_dir,
-            )
-        ] += 1
+    for src_file, reason in manifest_rows:
+        # _metadata.file_path is a URI: file:/x, file:///x both occur
+        src = re.sub(r"^file:(//)?", "", src_file)
+        if not os.path.exists(src):
+            moved["skipped"] += 1
+            continue
+        dest = quarantine_dir if reason else archive_dir
+        shutil.move(src, os.path.join(dest, os.path.basename(src)))
+        moved["quarantine" if reason else "archive"] += 1
     return moved
 
 

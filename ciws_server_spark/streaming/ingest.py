@@ -256,7 +256,11 @@ def stream_line_protocol(
     carries lands as a string column. The parse is native column
     functions end-to-end, so the per-batch plan is codegen'd.
     """
-    from ..plans.line_protocol import measurement_points, parse_lines
+    from ..plans.line_protocol import (
+        body_shape,
+        measurement_points,
+        parse_lines,
+    )
 
     reader = spark.readStream.option("pathGlobFilter", "*.lp")
     if max_files_per_trigger:
@@ -269,8 +273,9 @@ def stream_line_protocol(
     def process_batch(batch_df, batch_id: int) -> None:
         # src_file rides through the parse as a passthrough column
         parsed = parse_lines(batch_df).localCheckpoint(eager=True)
+        tag_keys = body_shape(parsed).tag_keys
         for measurement, pts, tag_names in measurement_points(
-            parsed, schemas, sinks.partition_tags
+            parsed, schemas, tag_keys, sinks.partition_tags
         ):
             sinks.append_points(
                 pts, table_dir, measurement, batch_id=batch_id
