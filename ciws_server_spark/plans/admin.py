@@ -62,7 +62,7 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
-from .influxql import DEFAULT_DATABASE, InfluxQLError, _unquote
+from .influxql import DEFAULT_DATABASE, InfluxQLError, _unquote, result_frame
 
 _SUBS_FILE = "_subscriptions.json"
 
@@ -118,13 +118,7 @@ def _default_policy(table_dir: str | None):
     the seeded autogen when no registry is attached."""
     from . import retention
 
-    if table_dir is None:
-        # the seed every InfluxDB database starts with (no registry)
-        state = {
-            "autogen": {"duration_s": 0, "shard_s": 604800, "default": True}
-        }
-    else:
-        state = retention._load(table_dir)
+    state = retention._load(table_dir)
     name = next(
         (n for n, p in sorted(state.items()) if p.get("default")),
         sorted(state)[0],
@@ -179,7 +173,8 @@ def show_shards(spark, tables, table_dir, database, time_col="time"):
             spark, tables, table_dir, database, time_col
         )
     ]
-    out = spark.createDataFrame(
+    out = result_frame(
+        spark,
         rows,
         "id BIGINT, database STRING, retention_policy STRING, "
         "shard_group BIGINT, start_epoch BIGINT, end_epoch BIGINT, "
@@ -210,17 +205,12 @@ def show_shard_groups(spark, tables, table_dir, database, time_col="time"):
     )
 
 
-def drop_shard(
-    spark, tables, statement, table_dir, database, time_col="time"
-) -> int:
+def drop_shard(spark, tables, m, table_dir, time_col="time") -> int:
     """DROP SHARD <id>: delete every measurement's points inside the
     shard group's window (upstream deletes the shard files; the
     window IS this store's shard). Returns rows deleted."""
     from .influxql import execute_delete
 
-    if table_dir is None:
-        raise InfluxQLError("DROP SHARD requires a table_dir")
-    m = _DROP_SHARD_RE.match(statement)
     sid = int(m.group("id"))
     rp, shard_s, _ = _default_policy(table_dir)
     windows = _shard_windows(tables, shard_s, time_col)
@@ -270,16 +260,17 @@ def show_queries(spark, tables, database):
                 "running" if q.isActive else "stopped",
             )
         )
-    return spark.createDataFrame(
+    return result_frame(
+        spark,
         rows,
         "qid BIGINT, query STRING, database STRING, "
         "batches BIGINT, status STRING",
     )
 
 
-def kill_query(spark, tables, statement) -> str:
+def kill_query(spark, tables, m) -> str:
     spark = _session(spark, tables)
-    qid = int(_KILL_QUERY_RE.match(statement).group("qid"))
+    qid = int(m.group("qid"))
     active = _active_queries(spark)
     if not 1 <= qid <= len(active):
         raise InfluxQLError(f"query not found: {qid}")
@@ -327,7 +318,8 @@ def show_stats(spark, tables, table_dir):
                     float(sum(sz for _, sz in files)),
                 )
             )
-    return spark.createDataFrame(
+    return result_frame(
+        spark,
         rows, "module STRING, stat STRING, value DOUBLE"
     )
 
@@ -344,7 +336,8 @@ def show_diagnostics(spark, tables):
         ("system", "platform", platform.system()),
         ("system", "arch", platform.machine()),
     ]
-    return spark.createDataFrame(
+    return result_frame(
+        spark,
         rows, "component STRING, `key` STRING, value STRING"
     )
 
@@ -384,10 +377,7 @@ def _check_db_rp(db_tok, rp_tok, table_dir, database) -> tuple[str, str]:
     return db, rp
 
 
-def create_subscription(statement, table_dir, database) -> str:
-    if table_dir is None:
-        raise InfluxQLError("CREATE SUBSCRIPTION requires a table_dir")
-    m = _CREATE_SUB_RE.match(statement)
+def create_subscription(m, table_dir, database) -> str:
     name = _unquote(m.group("name"))
     db, rp = _check_db_rp(m.group("db"), m.group("rp"), table_dir, database)
     dests = re.findall(r"'([^']*)'", m.group("dests"))
@@ -405,10 +395,7 @@ def create_subscription(statement, table_dir, database) -> str:
     return name
 
 
-def drop_subscription(statement, table_dir, database) -> bool:
-    if table_dir is None:
-        raise InfluxQLError("DROP SUBSCRIPTION requires a table_dir")
-    m = _DROP_SUB_RE.match(statement)
+def drop_subscription(m, table_dir, database) -> bool:
     name = _unquote(m.group("name"))
     _db, rp = _check_db_rp(m.group("db"), m.group("rp"), table_dir, database)
     state = _subs_load(table_dir)
@@ -421,8 +408,6 @@ def drop_subscription(statement, table_dir, database) -> bool:
 
 
 def show_subscriptions(spark, tables, table_dir):
-    if table_dir is None:
-        raise InfluxQLError("SHOW SUBSCRIPTIONS requires a table_dir")
     spark = _session(spark, tables)
     state = _subs_load(table_dir)
     rows = [
@@ -434,7 +419,8 @@ def show_subscriptions(spark, tables, table_dir):
         )
         for _k, rec in sorted(state.items())
     ]
-    return spark.createDataFrame(
+    return result_frame(
+        spark,
         rows,
         "retention_policy STRING, name STRING, mode STRING, "
         "destinations ARRAY<STRING>",

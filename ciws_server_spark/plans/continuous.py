@@ -48,11 +48,12 @@ from datetime import datetime, timezone
 
 from .influxql import (
     InfluxQLError,
-    _QUERY_RE,
     _split_commas,
     _TIME_BUCKET_RE,
     _unquote,
     execute_into,
+    parse,
+    result_frame,
 )
 
 _CREATE_CQ_RE = re.compile(
@@ -185,17 +186,18 @@ def _inject_time_range(body: str, m, lo: str, hi: str) -> str:
 
 
 def create_continuous_query(
-    statement: str, table_dir: str, now: datetime, database: str | None = None
+    cm: re.Match, table_dir: str, now: datetime, database: str | None = None
 ) -> str:
-    """Parse + validate a CREATE CONTINUOUS QUERY and persist it.
+    """Validate a matched CREATE CONTINUOUS QUERY and persist it.
 
     The CQ starts from the bucket boundary at or before ``now`` —
     history before creation is the batch INTO statement's job, matching
     InfluxDB (CQs only run forward from creation).
     """
-    cm = _CREATE_CQ_RE.match(statement)
-    if not cm:
-        raise InfluxQLError(f"unparseable CREATE CONTINUOUS QUERY: {statement!r}")
+    if now is None:
+        raise InfluxQLError(
+            "CREATE CONTINUOUS QUERY requires now= (deterministic clock)"
+        )
     name = _unquote(cm.group("name"))
     if cm.group("db") is not None and database is not None:
         if _unquote(cm.group("db")) != database:
@@ -203,10 +205,11 @@ def create_continuous_query(
                 f"unknown database: {_unquote(cm.group('db'))!r}"
             )
     body = cm.group("body").strip()
-    bm = _QUERY_RE.match(body)
+    stmt = parse(body)
+    bm = stmt.match if stmt.kind in ("select", "into") else None
     if not bm:
         raise InfluxQLError(f"unparseable CQ body: {body!r}")
-    if not bm.group("into"):
+    if stmt.kind != "into":
         raise InfluxQLError("continuous query body must contain INTO")
     interval_s, offset_s = _cq_interval(bm)
 
@@ -239,7 +242,7 @@ def create_continuous_query(
     if name in state:
         raise InfluxQLError(f"continuous query already exists: {name!r}")
     state[name] = {
-        "statement": " ".join(statement.split()),
+        "statement": " ".join(cm.string.split()),
         "query": body,
         "database": _unquote(cm.group("db")) if cm.group("db") else None,
         "interval_s": interval_s,
@@ -258,10 +261,7 @@ def create_continuous_query(
     return name
 
 
-def drop_continuous_query(statement: str, table_dir: str) -> bool:
-    dm = _DROP_CQ_RE.match(statement)
-    if not dm:
-        raise InfluxQLError(f"unparseable DROP CONTINUOUS QUERY: {statement!r}")
+def drop_continuous_query(dm: re.Match, table_dir: str) -> bool:
     name = _unquote(dm.group("name"))
     state = _load(table_dir)
     if name not in state:
@@ -276,20 +276,14 @@ def show_continuous_queries(spark, table_dir: str):
     response shape — query is the full CREATE statement (InfluxDB
     echoes it back RESAMPLE clause and all), falling back to the bare
     body for records persisted before the statement was kept."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
     state = _load(table_dir)
     rows = [
         (n, state[n].get("statement", state[n]["query"]))
         for n in sorted(state)
     ]
-    schema = StructType(
-        [
-            StructField("name", StringType(), False),
-            StructField("query", StringType(), False),
-        ]
+    return result_frame(
+        spark, rows, "name STRING NOT NULL, query STRING NOT NULL"
     )
-    return spark.createDataFrame(rows, schema)
 
 
 def run_due_continuous_queries(
@@ -386,15 +380,15 @@ def _run_due_locked(
         if hi_epoch <= lo_epoch:
             continue  # no closed bucket in range
         lo, hi = _fmt(lo_epoch), _fmt(hi_epoch)
-        bm = _QUERY_RE.match(cq["query"])
+        stmt = parse(cq["query"])
         if for_s is not None:
             # the TARGET holds UTC instants — convert the wall-clock
             # recompute window before deleting from it
             _delete_target_range(
-                spark, table_dir, _unquote(bm.group("into")),
+                spark, table_dir, _unquote(stmt.into),
                 _wall_to_utc(lo, tz), _wall_to_utc(hi, tz), time_col,
             )
-        bounded = _inject_time_range(cq["query"], bm, lo, hi)
+        bounded = _inject_time_range(cq["query"], stmt.match, lo, hi)
         execute_into(spark, tables, bounded, table_dir, time_col)
         cq["last_end"] = hi
         cq["last_tick"] = _fmt(tick_epoch)

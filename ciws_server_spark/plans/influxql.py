@@ -187,6 +187,7 @@ still works and rates against wall-clock Δt.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 from typing import NamedTuple
@@ -2482,9 +2483,10 @@ def _one_partition_if_small(out: DataFrame) -> DataFrame:
 
 
 def translate(
-    df: DataFrame, query: str, time_col: str = "time", now=None
+    df: DataFrame, query: str | Statement, time_col: str = "time", now=None
 ) -> DataFrame:
-    """Translate one InfluxQL statement against a measurement frame.
+    """Translate one InfluxQL statement (text, or a :class:`Statement`)
+    against a measurement frame.
 
     ``df`` is the measurement's DataFrame (the FROM name is validated
     but binding is the caller's job — pass ``tables[name]``); returns
@@ -2524,21 +2526,23 @@ def translate(
     file per building, not its whole history, and usually passes the
     one-partition gate. Any other statement plans as before.
     """
-    return _translate(df, query, time_col, now, fan_out=False)
+    stmt = parse(query, now) if isinstance(query, str) else query
+    return _translate(df, stmt, time_col, fan_out=False)
 
 
 def _translate(
-    df: DataFrame, query: str, time_col: str, now, *, fan_out: bool
+    df: DataFrame, stmt: Statement, time_col: str, *, fan_out: bool
 ) -> DataFrame:
     """:func:`translate`. ``fan_out`` marks one measurement of a
     multi-measurement statement: its frame keeps its partitioning,
     because each measurement passing the one-partition gate does not
     make their union pass it."""
-    query = _resolve_now(query, now)
-    m = _QUERY_RE.match(query)
+    if stmt.error:
+        raise stmt.error
+    m = stmt.match if stmt.kind in ("select", "into") else None
     if not m:
-        raise InfluxQLError(f"unparseable InfluxQL: {query!r}")
-    if m.group("into"):
+        raise InfluxQLError(f"unparseable InfluxQL: {stmt.text!r}")
+    if stmt.into:
         raise InfluxQLError(
             "INTO is a write statement — run it via execute_into()"
         )
@@ -3073,7 +3077,7 @@ def registered_database(table_dir: str | None) -> str:
     return DEFAULT_DATABASE
 
 
-def execute_create_database(statement: str, table_dir: str) -> str:
+def execute_create_database(m: re.Match, table_dir: str) -> str:
     """Register the store's (single) logical database name.
 
     Idempotent like InfluxDB's. Re-creating under a DIFFERENT name is
@@ -3081,7 +3085,6 @@ def execute_create_database(statement: str, table_dir: str) -> str:
     silently orphan retention/CQ state keyed to the first."""
     import json as _json
 
-    m = _CREATE_DB_RE.match(statement)
     name = _unquote(m.group(1))
     current_path = os.path.join(table_dir, _DB_FILE)
     current = registered_database(table_dir)
@@ -3097,13 +3100,12 @@ def execute_create_database(statement: str, table_dir: str) -> str:
     return name
 
 
-def execute_drop_database(spark, statement: str, table_dir: str) -> bool:
+def execute_drop_database(spark, m: re.Match, table_dir: str) -> bool:
     """InfluxDB ``DROP DATABASE``: every measurement, policy, and CQ
     under the store dir goes. Measurements drop through
     :func:`execute_drop` (locked, atomic per table); the registry
     sidecars go last, so a crash mid-way leaves a smaller database,
     never an inconsistent one. Returns True if the name matched."""
-    m = _DROP_DB_RE.match(statement)
     name = _unquote(m.group(1))
     if name != registered_database(table_dir):
         return False
@@ -3135,6 +3137,24 @@ _FIELD_TYPES = {
     "boolean": "boolean",
     "decimal": "float",
 }
+
+
+def result_frame(spark, rows: list, ddl: str) -> DataFrame:
+    """A result frame of driver-side ``rows`` under the ``ddl`` schema,
+    handed to the JVM as one Arrow table: a local relation, so reading
+    it starts no Python worker, where a frame built from a Python list
+    is parallelized through one."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _show(
@@ -3181,20 +3201,12 @@ def _show(
     if kind == "DATABASES":
         # one logical database per registry (the reference's client
         # connects to a single config-named database)
-        return spark.createDataFrame([(db,)], "name STRING")
+        return result_frame(spark, [(db,)], "name STRING")
     if kind == "RETENTION POLICIES":
-        on = _unquote(m.group(2)) if m.group(2) else db
-        if on != db:
-            raise InfluxQLError(f"unknown database: {on!r}")
-        # InfluxDB 1.x default policy row. duration "0s" = keep
-        # forever — matching this engine's model, where retention is
-        # an explicit partition-drop job (sinks.retention_delete /
-        # A3), not a policy the store enforces continuously.
-        return spark.createDataFrame(
-            [("autogen", "0s", "168h0m0s", 1, True)],
-            "name STRING, duration STRING, shardGroupDuration STRING, "
-            "replicaN INT, `default` BOOLEAN",
-        )
+        # no store dir: the seeded autogen policy alone
+        from . import retention
+
+        return retention.show_retention_policies(spark, None, db, m.group(2))
     if kind == "MEASUREMENTS":
         names = sorted(tables)
         if m.group("mre"):
@@ -3217,17 +3229,13 @@ def _show(
             names = names[int(m.group("off")):]
         if m.group("lim"):
             names = names[: int(m.group("lim"))]
-        return spark.createDataFrame(
-            [(n,) for n in names], "name STRING"
-        )
+        return result_frame(spark, [(n,) for n in names], "name STRING")
     if kind == "MEASUREMENT CARDINALITY":
         # exact counts throughout the CARDINALITY family (InfluxDB
         # 1.x defaults to estimated with an EXACT keyword variant;
         # this engine has no sketch registry, and exact ⊇ EXACT) —
         # same convention as SHOW SERIES CARDINALITY above
-        return spark.createDataFrame(
-            [(len(tables),)], "count BIGINT"
-        )
+        return result_frame(spark, [(len(tables),)], "count BIGINT")
     if kind in ("TAG KEY CARDINALITY", "FIELD KEY CARDINALITY"):
         names = _show_from_names(m.group("frm"), tables)
         seen: set[str] = set()
@@ -3238,7 +3246,7 @@ def _show(
                         seen.add(c)
                 elif t.split("(")[0] in _FIELD_TYPES:
                     seen.add(c)
-        return spark.createDataFrame([(len(seen),)], "count BIGINT")
+        return result_frame(spark, [(len(seen),)], "count BIGINT")
     if kind == "TAG VALUES CARDINALITY":
         # the one CARDINALITY that scans: distinct non-null values of
         # one tag column — a partial-agg'd count-distinct on the
@@ -3266,7 +3274,7 @@ def _show(
             # unknown key — FROM-qualified or not — is a 0-count
             # result, not an error: InfluxDB 1.x returns an empty
             # cardinality for a key the measurement doesn't have
-            return spark.createDataFrame([(0,)], "count BIGINT")
+            return result_frame(spark, [(0,)], "count BIGINT")
         from functools import reduce
 
         allv = reduce(lambda a, b: a.unionByName(b), frames)
@@ -3294,7 +3302,7 @@ def _show(
             )
             if not tags:
                 frames.append(
-                    spark.createDataFrame([(n,)], "key STRING")
+                    result_frame(spark, [(n,)], "key STRING")
                 )
                 continue
             pairs = [
@@ -3313,8 +3321,8 @@ def _show(
             # a no-match regex FROM names zero measurements (the
             # empty-reduce TypeError here was fuzz-found, r11)
             if kind == "SERIES CARDINALITY":
-                return spark.createDataFrame([(0,)], "count BIGINT")
-            return spark.createDataFrame([], "key STRING")
+                return result_frame(spark, [(0,)], "count BIGINT")
+            return result_frame(spark, [], "key STRING")
         out = reduce(lambda a, b: a.unionByName(b), frames)
         if kind == "SERIES CARDINALITY":
             # exact count here — the store has no sketch registry to
@@ -3355,7 +3363,7 @@ def _show(
             if kind == "TAG KEYS"
             else "measurement STRING, fieldKey STRING, fieldType STRING"
         )
-        return spark.createDataFrame(rows or [], schema)
+        return result_frame(spark, rows, schema)
     if kind == "TAG VALUES":
         # SHOW TAG VALUES [FROM m] WITH KEY ... — the one metadata
         # statement that scans: distinct values per named tag column
@@ -3418,8 +3426,8 @@ def _show(
                 for k in sorted(set(keys))
             )
         if not frames:
-            return spark.createDataFrame(
-                [], "measurement STRING, key STRING, value STRING"
+            return result_frame(
+                spark, [], "measurement STRING, key STRING, value STRING"
             )
         out = (
             reduce(lambda a, b: a.unionByName(b), frames)
@@ -3465,31 +3473,6 @@ def _split_subquery(query: str) -> tuple[str, str] | None:
     raise InfluxQLError("unbalanced parentheses in FROM subquery")
 
 
-def statement_order_desc(statement: str) -> bool:
-    """True iff the OUTER statement sorts by ``time DESC``.
-
-    Consumed by the wire serializers: a multi-measurement frame is
-    re-sorted on (measurement, time) before serialization, and that
-    re-sort must preserve the statement's requested time direction —
-    forcing ASC silently inverted ``ORDER BY time DESC`` for regex /
-    comma FROM queries and made a row cap keep the OLDEST rows
-    (advisor r14). Subqueries are stripped first so an inner ORDER BY
-    never masquerades as the outer one; an unparseable statement
-    defaults to ASC (the translator raises its own error for those).
-    """
-    try:
-        query = statement
-        for _ in range(16):  # nesting bound; translator rejects deeper
-            sub = _split_subquery(query)
-            if sub is None:
-                break
-            query = sub[1]  # outer, with a FROM __sub__ placeholder
-        m = _QUERY_RE.match(query)
-        return bool(m) and (m.group("order") or "ASC").upper() == "DESC"
-    except Exception:  # noqa: BLE001 — ordering hint, never a failure
-        return False
-
-
 def _resolve_into_target(tok: str, table_dir: str) -> str:
     """INTO targets may be fully qualified the way InfluxDB clients
     write them — ``"db"."rp"."measurement"`` or ``"rp"."measurement"``
@@ -3498,8 +3481,7 @@ def _resolve_into_target(tok: str, table_dir: str) -> str:
     created namespace). Returns the bare measurement name; the store
     keeps one physical layout per measurement, with the policy layer
     applied by the retention tick rather than by storage routing."""
-    parts = re.findall(r'"[^"]+"|[^".]+', tok.strip())
-    parts = [_unquote(p) for p in parts if p]
+    parts = [_unquote(p) for p in _from_parts(tok)]
     if not 1 <= len(parts) <= 3:
         raise InfluxQLError(f"bad INTO target: {tok!r}")
     if len(parts) == 3:
@@ -3516,13 +3498,14 @@ def _resolve_into_target(tok: str, table_dir: str) -> str:
 
 
 def _execute_into_backref(
-    spark, tables, m, quals, query: str, table_dir: str, time_col: str
+    spark, tables, stmt: Statement, quals, table_dir: str, time_col: str
 ):
     """``SELECT ... INTO [db.rp.]:MEASUREMENT FROM /re/`` (InfluxDB
     backreference): run the statement once per matched source
     measurement, writing each result into the SAME-NAMED target.
     Returns a (measurement, written) summary frame — upstream's
-    per-measurement written counts.
+    per-measurement written counts. ``stmt`` is the statement without
+    its INTO.
 
     This store keeps one physical layout per measurement (db/rp
     qualifiers are validated against the registries, not used as
@@ -3536,7 +3519,7 @@ def _execute_into_backref(
     from ..sources import sinks
     from .admin import _session
 
-    frm = m.group("from").strip()
+    frm = stmt.match.group("from").strip()
     if not (
         (frm.startswith("/") and frm.endswith("/"))
         or re.fullmatch(r'"[^"]+"|\w+', frm)
@@ -3544,42 +3527,29 @@ def _execute_into_backref(
         raise InfluxQLError(
             "INTO :MEASUREMENT requires a single or /regex/ FROM"
         )
-    names = _show_from_names(frm, tables)
-    # rewrite using the ALREADY-MATCHED spans (never a fresh \S+
-    # regex over the text — a FROM token the parser matched partially
-    # would leave corrupting fragments behind): splice the target
-    # name into the FROM span, then drop the INTO clause by its
-    # exact matched target text
-    f_start, f_end = m.span("from")
     written = []
-    for name in names:
+    for name in _show_from_names(frm, tables):
         if quals:
             # validates db / retention policy; target name is fixed
             # by the backreference
             _resolve_into_target(f'{quals}."{name}"', table_dir)
-        spliced = query[:f_start] + f'"{name}"' + query[f_end:]
-        one = re.sub(
-            r"\s+INTO\s+" + re.escape(m.group("into")),
-            "",
-            spliced,
-            count=1,
-            flags=re.I,
+        result = translate(
+            tables[name], stmt._replace(series_name=name), time_col
         )
-        result = query_measurement(spark, tables, one, time_col)
         if "time_bucket" in result.columns:
             result = result.withColumnRenamed("time_bucket", "time")
         n = result.count()
         sinks.append_points(result, table_dir, name)
         written.append((name, n))
-    return _session(spark, tables).createDataFrame(
-        written, "measurement STRING, written BIGINT"
+    return result_frame(
+        _session(spark, tables), written, "measurement STRING, written BIGINT"
     )
 
 
 def execute_into(
     spark,
     tables: dict[str, DataFrame],
-    query: str,
+    query: str | Statement,
     table_dir: str,
     time_col: str = "time",
     now=None,
@@ -3591,29 +3561,23 @@ def execute_into(
     ``sinks.PARTITIONING`` get their tag+date layout. Returns the
     target table's frame after the write.
     """
-    import os
-
     from ..sources import sinks
 
-    query = _resolve_now(query, now)
-    m = _QUERY_RE.match(query)
-    if not m or not m.group("into"):
-        raise InfluxQLError(f"not an INTO statement: {query!r}")
+    stmt = parse(query, now) if isinstance(query, str) else query
+    if stmt.error:
+        raise stmt.error
+    if stmt.kind != "into":
+        raise InfluxQLError(f"not an INTO statement: {stmt.text!r}")
+    select = stmt._replace(kind="select", privilege="READ", into=None)
     bm = re.fullmatch(
-        r"(?:(?P<quals>\S+)\.)?:MEASUREMENT",
-        m.group("into").strip(),
-        re.IGNORECASE,
+        r"(?:(?P<quals>\S+)\.)?:MEASUREMENT", stmt.into.strip(), re.IGNORECASE
     )
     if bm:
         return _execute_into_backref(
-            spark, tables, m, bm.group("quals"), query, table_dir, time_col
+            spark, tables, select, bm.group("quals"), table_dir, time_col
         )
-    target = _resolve_into_target(m.group("into"), table_dir)
-    stripped = re.sub(
-        r"\s+INTO\s+" + re.escape(m.group("into")), "", query,
-        count=1, flags=re.I,
-    )
-    result = query_measurement(spark, tables, stripped, time_col)
+    target = _resolve_into_target(stmt.into, table_dir)
+    result = query_measurement(spark, tables, select, time_col)
     if "time_bucket" in result.columns:
         result = result.withColumnRenamed("time_bucket", "time")
     sinks.append_points(result, table_dir, target)
@@ -3671,7 +3635,11 @@ def _mutation_targets(spark, tok: str | None, table_dir: str) -> list[str]:
 
 
 def execute_delete(
-    spark, query: str, table_dir: str, time_col: str = "time", now=None
+    spark,
+    query: str | Statement,
+    table_dir: str,
+    time_col: str = "time",
+    now=None,
 ) -> int:
     """Run an InfluxQL ``DELETE [FROM <m>|/re/] [WHERE ...]`` statement
     against the on-disk partitioned tables under ``table_dir`` (regex
@@ -3687,10 +3655,12 @@ def execute_delete(
     """
     from ..sources import sinks
 
-    query = _resolve_now(query, now)
-    dm = _DELETE_RE.match(query)
+    stmt = parse(query, now) if isinstance(query, str) else query
+    if stmt.error:
+        raise stmt.error
+    dm = stmt.match if stmt.kind == "delete" else None
     if not dm:
-        raise InfluxQLError(f"not a DELETE statement: {query!r}")
+        raise InfluxQLError(f"not a DELETE statement: {stmt.text!r}")
     if dm.group(1) is None and dm.group(2) is None:
         # a bare DELETE is invalid upstream too — refuse to guess
         raise InfluxQLError("DELETE requires FROM and/or WHERE")
@@ -3733,7 +3703,7 @@ _DROP_SERIES_RE = re.compile(
 
 
 def execute_drop_series(
-    spark, query: str, table_dir: str, time_col: str = "time"
+    spark, query: str | Statement, table_dir: str, time_col: str = "time"
 ) -> int:
     """InfluxQL ``DROP SERIES [FROM <m>|/re/] [WHERE <tag predicates>]``:
     remove every point of the matching series (regex or absent FROM
@@ -3745,9 +3715,10 @@ def execute_drop_series(
     """
     from ..sources import sinks
 
-    dm = _DROP_SERIES_RE.match(query)
+    stmt = parse(query) if isinstance(query, str) else query
+    dm = stmt.match if stmt.kind == "drop_series" else None
     if not dm:
-        raise InfluxQLError(f"not a DROP SERIES statement: {query!r}")
+        raise InfluxQLError(f"not a DROP SERIES statement: {stmt.text!r}")
     if dm.group(1) is None and dm.group(2) is None:
         raise InfluxQLError("DROP SERIES requires FROM and/or WHERE")
     if dm.group(2) and re.search(
@@ -3771,7 +3742,7 @@ def execute_drop_series(
     return total
 
 
-def execute_drop(spark, query: str, table_dir: str) -> bool:
+def execute_drop(spark, query: str | Statement, table_dir: str) -> bool:
     """InfluxQL ``DROP MEASUREMENT <m>``: remove the on-disk table.
 
     Takes the table's compact lock (a drop is the ultimate rewrite —
@@ -3784,9 +3755,10 @@ def execute_drop(spark, query: str, table_dir: str) -> bool:
 
     from ..sources import sinks
 
-    dm = _DROP_RE.match(query)
+    stmt = parse(query) if isinstance(query, str) else query
+    dm = stmt.match if stmt.kind == "drop_measurement" else None
     if not dm:
-        raise InfluxQLError(f"not a DROP MEASUREMENT statement: {query!r}")
+        raise InfluxQLError(f"not a DROP MEASUREMENT statement: {stmt.text!r}")
     name = _safe_table(_unquote(dm.group(1)))
     root = os.path.join(table_dir, name)
     if not os.path.lexists(root):
@@ -3831,19 +3803,291 @@ def execute_drop(spark, query: str, table_dir: str) -> bool:
     return True
 
 
+class Statement(NamedTuple):
+    """One InfluxQL statement, parsed once by :func:`parse`; every later
+    stage (authorization, dispatch, translation, the wire series name)
+    reads this record instead of the text."""
+
+    #: the statement after ``now()`` resolved; for a FROM subquery, the
+    #: outer statement with the subquery replaced by ``__sub__``
+    text: str
+    #: one of :func:`_kinds` (the dispatcher's branches), else
+    #: ``explain``, ``show``, ``into`` or ``select``
+    kind: str
+    #: the kind's own regex match; None when no regex of the kind
+    #: matched (the statement then fails as unparseable when run)
+    match: re.Match | None
+    #: ``admin`` | ``WRITE`` | ``READ``
+    privilege: str
+    series_name: str = "results"
+    order_desc: bool = False
+    into: str | None = None
+    #: the FROM subquery of a SELECT, or the statement EXPLAIN explains
+    inner: Statement | None = None
+    #: an error found while parsing (``now()`` without ``now``,
+    #: unbalanced subquery parentheses), raised when the statement
+    #: runs, so it reports in-body like any run-time error
+    error: InfluxQLError | None = None
+
+
+_SHOW_NAME_RE = re.compile(r"\s*SHOW\s+(\w+(?:\s+\w+)?)", re.IGNORECASE)
+
+
+def _series_name_of(tok: str | None, text: str) -> str:
+    """Wire series name: a measurement named in FROM (qualifiers
+    stripped, unquoted; a regex or list FROM as written — its rows
+    carry their own measurement), else a SHOW statement's first two
+    keywords (``measurements``, ``tag_keys``, ``field_key``)."""
+    if tok:
+        tok = tok.strip().rstrip(";")
+        if tok.startswith("/") or "," in tok:
+            return tok
+        parts = _from_parts(tok)
+        return _unquote(parts[-1] if parts else tok)
+    m = _SHOW_NAME_RE.match(text)
+    return m.group(1).lower().replace(" ", "_") if m else "results"
+
+
+def _from_parts(tok: str) -> list[str]:
+    """The dotted parts of a FROM token (``db.rp.m``, ``db..m``), each
+    part still quoted; a quoted name containing dots is one part."""
+    return re.findall(r'"[^"]+"|[^".]+', tok.strip())
+
+
+class _Call(NamedTuple):
+    spark: object
+    tables: dict
+    table_dir: str | None
+    time_col: str
+    database: str | None
+    now: object
+
+
+@functools.cache
+def _kinds() -> dict:
+    """The one kind table, in dispatch order: ``kind -> (regex,
+    leading keywords, privilege, table_dir label, handler(call,
+    statement))``. ``parse`` tries each regex in turn; the leading
+    keywords classify a statement no regex matches (``CREATE DATABASE
+    a b`` still needs admin); the label names what needs a
+    ``table_dir`` to run. ``into`` has no regex of its own: it is a
+    SELECT whose match has an INTO clause."""
+    from . import admin, continuous, retention, users
+
+    def on_dir(fn):
+        return lambda c, s: fn(s.match, c.table_dir)
+
+    def on_db(fn):
+        return lambda c, s: fn(s.match, c.table_dir, c.database)
+
+    def on_store(fn):
+        return lambda c, s: fn(c.spark, c.tables, c.table_dir)
+
+    def sharded(fn):
+        return lambda c, s: fn(
+            c.spark, c.tables, c.table_dir, c.database, c.time_col
+        )
+
+    return {
+        "create_database": (
+            _CREATE_DB_RE, r"CREATE\s+DATABASE", "admin", "CREATE DATABASE",
+            on_dir(execute_create_database)),
+        "drop_database": (
+            _DROP_DB_RE, r"DROP\s+DATABASE", "admin", "DROP DATABASE",
+            lambda c, s: execute_drop_database(c.spark, s.match, c.table_dir)),
+        "create_retention_policy": (
+            retention._CREATE_RP_RE, r"CREATE\s+RETENTION", "admin",
+            "CREATE RETENTION POLICY", on_db(retention.create_retention_policy)),
+        "alter_retention_policy": (
+            retention._ALTER_RP_RE, r"ALTER\s+RETENTION", "admin",
+            "ALTER RETENTION POLICY", on_db(retention.alter_retention_policy)),
+        "drop_retention_policy": (
+            retention._DROP_RP_RE, r"DROP\s+RETENTION", "admin",
+            "DROP RETENTION POLICY", on_db(retention.drop_retention_policy)),
+        "show_retention_policies": (
+            retention._SHOW_RP_RE, None, "READ", None,
+            lambda c, s: retention.show_retention_policies(
+                c.spark, c.table_dir, c.database, s.match.group("db"))),
+        "create_user": (
+            users._CREATE_USER_RE, r"CREATE\s+USER", "admin",
+            "user management", on_dir(users.create_user)),
+        "set_password": (
+            users._SET_PW_RE, r"SET\s+PASSWORD", "admin", "user management",
+            on_dir(users.set_password)),
+        "drop_user": (
+            users._DROP_USER_RE, r"DROP\s+USER", "admin", "user management",
+            on_dir(users.drop_user)),
+        "grant": (
+            users._GRANT_RE, r"GRANT", "admin", "user management",
+            on_db(users.grant)),
+        "revoke": (
+            users._REVOKE_RE, r"REVOKE", "admin", "user management",
+            on_db(users.revoke)),
+        "show_users": (
+            users._SHOW_USERS_RE, r"SHOW\s+USERS", "admin", "SHOW USERS",
+            lambda c, s: users.show_users(c.spark, c.table_dir)),
+        "show_grants": (
+            users._SHOW_GRANTS_RE, r"SHOW\s+GRANTS", "admin", "SHOW GRANTS",
+            lambda c, s: users.show_grants(c.spark, c.table_dir, s.match)),
+        "create_continuous_query": (
+            continuous._CREATE_CQ_RE, r"CREATE\s+CONTINUOUS", "admin",
+            "CREATE CONTINUOUS QUERY",
+            lambda c, s: continuous.create_continuous_query(
+                s.match, c.table_dir, c.now, c.database)),
+        "drop_continuous_query": (
+            continuous._DROP_CQ_RE, r"DROP\s+CONTINUOUS", "admin",
+            "DROP CONTINUOUS QUERY", on_dir(continuous.drop_continuous_query)),
+        "show_continuous_queries": (
+            continuous._SHOW_CQ_RE, None, "READ", "SHOW CONTINUOUS QUERIES",
+            lambda c, s: continuous.show_continuous_queries(
+                c.spark, c.table_dir)),
+        "show_shards": (
+            admin._SHOW_SHARDS_RE, r"SHOW\s+SHARDS", "admin", None,
+            sharded(admin.show_shards)),
+        "show_shard_groups": (
+            admin._SHOW_SHARD_GROUPS_RE, r"SHOW\s+SHARD\s+GROUPS", "admin",
+            None, sharded(admin.show_shard_groups)),
+        "drop_shard": (
+            admin._DROP_SHARD_RE, r"DROP\s+SHARD", "admin", "DROP SHARD",
+            lambda c, s: admin.drop_shard(
+                c.spark, c.tables, s.match, c.table_dir, c.time_col)),
+        "show_queries": (
+            admin._SHOW_QUERIES_RE, r"SHOW\s+QUERIES", "admin", None,
+            lambda c, s: admin.show_queries(c.spark, c.tables, c.database)),
+        "kill_query": (
+            admin._KILL_QUERY_RE, r"KILL\s+QUERY", "admin", None,
+            lambda c, s: admin.kill_query(c.spark, c.tables, s.match)),
+        "show_stats": (
+            admin._SHOW_STATS_RE, r"SHOW\s+STATS", "admin", None,
+            on_store(admin.show_stats)),
+        "show_diagnostics": (
+            admin._SHOW_DIAGNOSTICS_RE, r"SHOW\s+DIAGNOSTICS", "admin", None,
+            lambda c, s: admin.show_diagnostics(c.spark, c.tables)),
+        "create_subscription": (
+            admin._CREATE_SUB_RE, r"CREATE\s+SUBSCRIPTION", "admin",
+            "CREATE SUBSCRIPTION", on_db(admin.create_subscription)),
+        "drop_subscription": (
+            admin._DROP_SUB_RE, r"DROP\s+SUBSCRIPTION", "admin",
+            "DROP SUBSCRIPTION", on_db(admin.drop_subscription)),
+        "show_subscriptions": (
+            admin._SHOW_SUBS_RE, r"SHOW\s+SUBSCRIPTIONS", "admin",
+            "SHOW SUBSCRIPTIONS", on_store(admin.show_subscriptions)),
+        "into": (
+            None, None, "WRITE", "INTO",
+            lambda c, s: execute_into(
+                c.spark, c.tables, s, c.table_dir, c.time_col, now=c.now)),
+        "drop_series": (
+            _DROP_SERIES_RE, r"DROP\s+SERIES", "WRITE", "DROP SERIES",
+            lambda c, s: execute_drop_series(
+                c.spark, s, c.table_dir, c.time_col)),
+        # DELETE alone of these reads its text after now() resolves
+        "delete": (
+            _DELETE_RE, r"DELETE", "WRITE", "DELETE",
+            lambda c, s: execute_delete(
+                c.spark, s, c.table_dir, c.time_col, now=c.now)),
+        "drop_measurement": (
+            _DROP_RE, r"DROP\s+MEASUREMENT", "WRITE", "DROP MEASUREMENT",
+            lambda c, s: execute_drop(c.spark, s, c.table_dir)),
+    }
+
+
+@functools.cache
+def _leading_re() -> re.Pattern:
+    """A statement's kind from its leading keywords alone."""
+    return re.compile(
+        r"^\s*(?:"
+        + "|".join(
+            f"(?P<{k}>{row[1]})" for k, row in _kinds().items() if row[1]
+        )
+        + r")\b",
+        re.IGNORECASE,
+    )
+
+
+def parse(statement: str, now=None) -> Statement:
+    """Parse one InfluxQL statement into a :class:`Statement`.
+
+    Each kind's existing regex is tried in the dispatcher's order. A
+    statement none matches is classified by its leading keywords, and
+    otherwise as a query: EXPLAIN, SHOW, SELECT ... FROM (subquery),
+    then SELECT [INTO]. Never raises: an error that running the
+    statement reports (``now()`` without ``now``, unbalanced subquery
+    parentheses) is kept in ``error`` and raised when it runs."""
+    resolved, error = _resolved(statement, now)
+    for kind, (rx, _, privilege, _, _) in _kinds().items():
+        text = resolved if kind == "delete" else statement
+        m = rx.match(text) if rx else None
+        if m:
+            return Statement(
+                text, kind, m, privilege, _series_name_of(None, text),
+                error=error if kind == "delete" else None,
+            )
+    lead = _leading_re().match(resolved)
+    return _parse_query(resolved, error, lead and lead.lastgroup)
+
+
+def _resolved(statement: str, now) -> tuple[str, InfluxQLError | None]:
+    """``statement`` with ``now()`` resolved, or unchanged with the
+    error resolving it raised."""
+    try:
+        return _resolve_now(statement, now), None
+    except InfluxQLError as exc:
+        return statement, exc
+
+
+def _parse_query(text: str, error=None, lead=None) -> Statement:
+    """The query half of :func:`parse`: the statements
+    :func:`query_measurement` runs, which parses text with it alone.
+    ``lead`` is the kind the leading keywords name, if any."""
+    em = _EXPLAIN_RE.match(text)
+    if em:
+        inner = _parse_query(em.group("stmt"))
+        return Statement(
+            text, "explain", em, "READ", inner.series_name, inner=inner,
+            error=error,
+        )
+    sm = _SHOW_RE.match(text)
+    if sm:
+        return Statement(
+            text, "show", sm, "READ", _series_name_of(sm.group("frm"), text),
+            error=error,
+        )
+    privilege = _kinds()[lead][2] if lead else "READ"
+    try:
+        sub = _split_subquery(text)
+    except InfluxQLError as exc:
+        return Statement(text, lead or "select", None, privilege,
+                         error=error or exc)
+    inner = None
+    if sub is not None:
+        inner_q, text = sub
+        inner = _parse_query(inner_q)
+    m = _QUERY_RE.match(text)
+    into = m.group("into") if m else None
+    if lead is None and (into or (inner and inner.privilege == "WRITE")):
+        privilege = "WRITE"
+    if inner is not None:
+        name = inner.series_name
+    else:
+        name = _series_name_of(m.group("from") if m else None, "")
+    kind = lead or ("into" if into and inner is None else "select")
+    desc = bool(m) and (m.group("order") or "ASC").upper() == "DESC"
+    return Statement(text, kind, m, privilege, name, desc, into, inner, error)
+
+
 def run_influxql(
     spark,
     tables: dict[str, DataFrame],
-    statement: str,
+    statement: str | Statement,
     table_dir: str | None = None,
     time_col: str = "time",
     database: str = None,
     now=None,
     credentials: tuple[str, str] | None = None,
 ):
-    """The server front door: dispatch ONE InfluxQL statement of any
-    supported kind — the entry point an HTTP query endpoint would
-    call per request.
+    """The server front door: run ONE InfluxQL statement of any
+    supported kind — text, or a :class:`Statement` from :func:`parse`
+    (the HTTP API parses each statement once, before authorizing it).
 
     * ``SELECT ... INTO`` → :func:`execute_into` (needs ``table_dir``)
     * ``DELETE FROM ...`` → :func:`execute_delete` → rows deleted (int)
@@ -3854,12 +4098,12 @@ def run_influxql(
     * ``SHOW ...`` / ``SELECT ...`` → :func:`query_measurement` →
       DataFrame
 
+    Dispatch is one lookup of the statement's kind in :func:`_kinds`.
     Write statements without a ``table_dir`` raise — a query-only
     registry has nowhere durable to write, and silently evaluating
     the SELECT half of an INTO would mis-report success.
     """
-    from . import continuous, retention
-
+    stmt = parse(statement, now) if isinstance(statement, str) else statement
     if database is None and table_dir is not None:
         database = registered_database(table_dir)
     if credentials is not None:
@@ -3871,130 +4115,23 @@ def run_influxql(
             raise InfluxQLError(
                 "credentials require a table_dir (the user registry)"
             )
-        from . import users as _users_auth
+        from . import users
 
-        _users_auth.authorize(
-            table_dir, credentials[0], credentials[1], statement, database
+        users.authorize(
+            table_dir, credentials[0], credentials[1], stmt.privilege,
+            database,
         )
-    if _CREATE_DB_RE.match(statement):
-        if table_dir is None:
-            raise InfluxQLError("CREATE DATABASE requires a table_dir")
-        return execute_create_database(statement, table_dir)
-    if _DROP_DB_RE.match(statement):
-        if table_dir is None:
-            raise InfluxQLError("DROP DATABASE requires a table_dir")
-        return execute_drop_database(spark, statement, table_dir)
-    if retention._CREATE_RP_RE.match(statement):
-        if table_dir is None:
-            raise InfluxQLError("CREATE RETENTION POLICY requires a table_dir")
-        return retention.create_retention_policy(
-            statement, table_dir, database
+    row = _kinds().get(stmt.kind)
+    if row is None or stmt.match is None:
+        # EXPLAIN, SHOW, SELECT, and any statement no regex matched
+        return query_measurement(
+            spark, tables, stmt, time_col, database=database, now=now
         )
-    if retention._ALTER_RP_RE.match(statement):
-        if table_dir is None:
-            raise InfluxQLError("ALTER RETENTION POLICY requires a table_dir")
-        return retention.alter_retention_policy(statement, table_dir, database)
-    if retention._DROP_RP_RE.match(statement):
-        if table_dir is None:
-            raise InfluxQLError("DROP RETENTION POLICY requires a table_dir")
-        return retention.drop_retention_policy(statement, table_dir, database)
-    rp_show = retention._SHOW_RP_RE.match(statement)
-    if rp_show and table_dir is not None:
-        # registry-backed when a store dir is attached; the bare
-        # autogen stub in _show still serves query-only registries
-        return retention.show_retention_policies(
-            spark, table_dir, database, rp_show.group("db")
-        )
-    from . import users as _users
-
-    for rx, fn, needs_db in (
-        (_users._CREATE_USER_RE, _users.create_user, False),
-        (_users._SET_PW_RE, _users.set_password, False),
-        (_users._DROP_USER_RE, _users.drop_user, False),
-        (_users._GRANT_RE, _users.grant, True),
-        (_users._REVOKE_RE, _users.revoke, True),
-    ):
-        if rx.match(statement):
-            if table_dir is None:
-                raise InfluxQLError(
-                    "user management requires a table_dir (the registry)"
-                )
-            if needs_db:
-                return fn(statement, table_dir, database)
-            return fn(statement, table_dir)
-    if _users._SHOW_USERS_RE.match(statement):
-        if table_dir is None:
-            raise InfluxQLError("SHOW USERS requires a table_dir")
-        return _users.show_users(spark, table_dir)
-    if _users._SHOW_GRANTS_RE.match(statement):
-        if table_dir is None:
-            raise InfluxQLError("SHOW GRANTS requires a table_dir")
-        return _users.show_grants(spark, table_dir, statement)
-    if continuous._CREATE_CQ_RE.match(statement):
-        if table_dir is None:
-            raise InfluxQLError("CREATE CONTINUOUS QUERY requires a table_dir")
-        if now is None:
-            raise InfluxQLError(
-                "CREATE CONTINUOUS QUERY requires now= (deterministic clock)"
-            )
-        return continuous.create_continuous_query(
-            statement, table_dir, now, database
-        )
-    if continuous._DROP_CQ_RE.match(statement):
-        if table_dir is None:
-            raise InfluxQLError("DROP CONTINUOUS QUERY requires a table_dir")
-        return continuous.drop_continuous_query(statement, table_dir)
-    if continuous._SHOW_CQ_RE.match(statement):
-        if table_dir is None:
-            raise InfluxQLError("SHOW CONTINUOUS QUERIES requires a table_dir")
-        return continuous.show_continuous_queries(spark, table_dir)
-    from . import admin as _admin
-
-    if _admin._SHOW_SHARDS_RE.match(statement):
-        return _admin.show_shards(spark, tables, table_dir, database, time_col)
-    if _admin._SHOW_SHARD_GROUPS_RE.match(statement):
-        return _admin.show_shard_groups(
-            spark, tables, table_dir, database, time_col
-        )
-    if _admin._DROP_SHARD_RE.match(statement):
-        return _admin.drop_shard(
-            spark, tables, statement, table_dir, database, time_col
-        )
-    if _admin._SHOW_QUERIES_RE.match(statement):
-        return _admin.show_queries(spark, tables, database)
-    if _admin._KILL_QUERY_RE.match(statement):
-        return _admin.kill_query(spark, tables, statement)
-    if _admin._SHOW_STATS_RE.match(statement):
-        return _admin.show_stats(spark, tables, table_dir)
-    if _admin._SHOW_DIAGNOSTICS_RE.match(statement):
-        return _admin.show_diagnostics(spark, tables)
-    if _admin._CREATE_SUB_RE.match(statement):
-        return _admin.create_subscription(statement, table_dir, database)
-    if _admin._DROP_SUB_RE.match(statement):
-        return _admin.drop_subscription(statement, table_dir, database)
-    if _admin._SHOW_SUBS_RE.match(statement):
-        return _admin.show_subscriptions(spark, tables, table_dir)
-    m = _QUERY_RE.match(statement)
-    if m and m.group("into"):
-        if table_dir is None:
-            raise InfluxQLError("INTO requires a table_dir to write to")
-        return execute_into(
-            spark, tables, statement, table_dir, time_col, now=now
-        )
-    if _DROP_SERIES_RE.match(statement):
-        if table_dir is None:
-            raise InfluxQLError("DROP SERIES requires a table_dir")
-        return execute_drop_series(spark, statement, table_dir, time_col)
-    if _DELETE_RE.match(statement):
-        if table_dir is None:
-            raise InfluxQLError("DELETE requires a table_dir")
-        return execute_delete(spark, statement, table_dir, time_col, now=now)
-    if _DROP_RE.match(statement):
-        if table_dir is None:
-            raise InfluxQLError("DROP MEASUREMENT requires a table_dir")
-        return execute_drop(spark, statement, table_dir)
-    return query_measurement(
-        spark, tables, statement, time_col, database=database, now=now
+    _, _, _, label, handler = row
+    if label and table_dir is None:
+        raise InfluxQLError(f"{label} requires a table_dir")
+    return handler(
+        _Call(spark, tables, table_dir, time_col, database, now), stmt
     )
 
 
@@ -4007,12 +4144,11 @@ _EXPLAIN_RE = re.compile(
 def execute_explain(
     spark,
     tables: dict[str, DataFrame],
-    stmt: str,
+    stmt: Statement,
     *,
     time_col: str = "time",
     database: str = None,
     now=None,
-    analyze: bool = False,
 ) -> DataFrame:
     """InfluxQL ``EXPLAIN [ANALYZE] SELECT ...`` (InfluxDB 1.7+
     surface): returns one text column named ``QUERY PLAN``, one row
@@ -4026,15 +4162,15 @@ def execute_explain(
 
     Like upstream, only SELECT can be explained — EXPLAIN of SHOW /
     DELETE / INTO raises the named error."""
-    if not re.match(r"^\s*SELECT\b", stmt, re.I):
+    inner = stmt.inner
+    if not re.match(r"^\s*SELECT\b", inner.text, re.I):
         raise InfluxQLError("EXPLAIN only supports SELECT statements")
-    qm = _QUERY_RE.match(_resolve_now(stmt, now))
-    if qm and qm.group("into"):
+    if inner.privilege == "WRITE":
         raise InfluxQLError(
             "EXPLAIN of SELECT ... INTO is not supported"
         )
     df = query_measurement(
-        spark, tables, stmt, time_col, database=database, now=now
+        spark, tables, inner, time_col, database=database, now=now
     )
     sess = df.sparkSession
     jqe = df._jdf.queryExecution()
@@ -4042,7 +4178,7 @@ def execute_explain(
         "formatted"
     )
     header = []
-    if analyze:
+    if stmt.match.group("analyze"):
         import time as _time
 
         t0 = _time.perf_counter()
@@ -4052,15 +4188,15 @@ def execute_explain(
             f"EXECUTION: wall={_time.perf_counter() - t0:.3f}s",
         ]
     lines = [s for s in jqe.explainString(mode).splitlines() if s.strip()]
-    return sess.createDataFrame(
-        [(s,) for s in header + lines], "`QUERY PLAN` STRING"
+    return result_frame(
+        sess, [(s,) for s in header + lines], "`QUERY PLAN` STRING"
     )
 
 
 def query_measurement(
     spark,
     tables: dict[str, DataFrame],
-    query: str,
+    query: str | Statement,
     time_col: str = "time",
     database: str = None,
     now=None,
@@ -4070,27 +4206,25 @@ def query_measurement(
     Also accepts InfluxQL subqueries (``SELECT ... FROM (SELECT ...)``,
     translated inside-out — the inner statement's result frame becomes
     the outer statement's measurement, with the inner bucket column as
-    the outer time column) and the SHOW metadata statements.
+    the outer time column) and the SHOW metadata statements. ``query``
+    is text, or a :class:`Statement` from :func:`parse`.
     """
-    query = _resolve_now(query, now)
-    em = _EXPLAIN_RE.match(query)
-    if em:
+    stmt = query
+    if isinstance(query, str):
+        stmt = _parse_query(*_resolved(query, now))
+    if stmt.error:
+        raise stmt.error
+    if stmt.kind == "explain":
         return execute_explain(
-            spark,
-            tables,
-            em.group("stmt"),
-            time_col=time_col,
-            database=database,
+            spark, tables, stmt, time_col=time_col, database=database,
             now=now,
-            analyze=em.group("analyze") is not None,
         )
-    sm = _SHOW_RE.match(query)
-    if sm:
-        return _show(spark, tables, sm, database=database, time_col=time_col)
-    sub = _split_subquery(query)
-    if sub is not None:
-        inner_q, outer_q = sub
-        inner_df = query_measurement(spark, tables, inner_q, time_col)
+    if stmt.kind == "show":
+        return _show(
+            spark, tables, stmt.match, database=database, time_col=time_col
+        )
+    if stmt.inner is not None:
+        inner_df = query_measurement(spark, tables, stmt.inner, time_col)
         inner_time = (
             "time_bucket" if "time_bucket" in inner_df.columns else time_col
         )
@@ -4102,10 +4236,10 @@ def query_measurement(
                 "subquery result has no time column; the inner "
                 "statement must keep raw points or GROUP BY time(...)"
             )
-        return translate(inner_df, outer_q, time_col=inner_time)
-    m = _QUERY_RE.match(query)
+        return _translate(inner_df, stmt, inner_time, fan_out=False)
+    m = stmt.match if stmt.kind in ("select", "into") else None
     if not m:
-        raise InfluxQLError(f"unparseable InfluxQL: {query!r}")
+        raise InfluxQLError(f"unparseable InfluxQL: {stmt.text!r}")
     tok = m.group("from")
     if tok.startswith("/") and tok.endswith("/") and len(tok) >= 2:
         # regex measurement: FROM /pattern/ evaluates the statement
@@ -4130,9 +4264,7 @@ def query_measurement(
             raise InfluxQLError(
                 f"no measurement matches {tok!r}"
             )
-        return _multi_measurement(
-            tables, matches, query, m.span("from"), time_col
-        )
+        return _multi_measurement(tables, matches, stmt, time_col)
     if "," in tok:
         # FROM m1, m2 — the explicit multi-measurement list, same
         # union semantics as the regex form
@@ -4143,13 +4275,11 @@ def query_measurement(
         for n in names:
             if n not in tables:
                 raise InfluxQLError(f"unknown measurement: {n!r}")
-        return _multi_measurement(
-            tables, names, query, m.span("from"), time_col
-        )
+        return _multi_measurement(tables, names, stmt, time_col)
     name = _unquote(_strip_from_qualifiers(tok, database))
     if name not in tables:
         raise InfluxQLError(f"unknown measurement: {name!r}")
-    return translate(tables[name], query, time_col=time_col)
+    return _translate(tables[name], stmt, time_col, fan_out=False)
 
 
 def _strip_from_qualifiers(tok: str, database: str | None) -> str:
@@ -4161,7 +4291,7 @@ def _strip_from_qualifiers(tok: str, database: str | None) -> str:
     policy layer is the retention tick, not storage routing). Returns
     the measurement token; a quoted name containing dots stays one
     token."""
-    parts = re.findall(r'"[^"]+"|[^".]+', tok.strip())
+    parts = _from_parts(tok)
     if len(parts) <= 1:
         return tok
     if len(parts) > 3:
@@ -4174,21 +4304,22 @@ def _strip_from_qualifiers(tok: str, database: str | None) -> str:
 
 
 def _multi_measurement(
-    tables: dict, names: list, query: str, from_span: tuple, time_col: str
+    tables: dict, names: list, stmt: Statement, time_col: str
 ) -> DataFrame:
     """Evaluate one statement against several measurements and union
     the per-measurement results by column name. Frames align to the
     union of their fields first (missing ones as typed nulls) so a
     projection of a field only SOME measurements carry resolves
     everywhere — the null-filled view InfluxDB presents (a
-    fully-missing field aggregates over nulls: count 0, mean null)."""
+    fully-missing field aggregates over nulls: count 0, mean null).
+    Each measurement translates the same parsed statement, bound to
+    its own frame."""
     from functools import reduce
 
     union_fields: dict = {}
     for n in names:
         for f in tables[n].schema.fields:
             union_fields.setdefault(f.name, f.dataType)
-    s, e = from_span
     frames = []
     for n in names:
         frame = tables[n]
@@ -4198,8 +4329,7 @@ def _multi_measurement(
                 frame = frame.withColumn(fname, F.lit(None).cast(ftype))
         frames.append(
             _translate(
-                frame, f"{query[:s]}{n}{query[e:]}", time_col, None,
-                fan_out=True,
+                frame, stmt._replace(series_name=n), time_col, fan_out=True
             ).select(F.lit(n).alias("measurement"), "*")
         )
     return reduce(

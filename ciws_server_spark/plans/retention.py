@@ -35,7 +35,7 @@ import os
 import re
 from datetime import datetime, timedelta
 
-from .influxql import DEFAULT_DATABASE, InfluxQLError, _unquote
+from .influxql import DEFAULT_DATABASE, InfluxQLError, _unquote, result_frame
 
 _STATE_FILE = "_retention_policies.json"
 
@@ -92,20 +92,24 @@ def _state_path(table_dir: str) -> str:
     return os.path.join(table_dir, _STATE_FILE)
 
 
-def _load(table_dir: str) -> dict:
-    try:
-        with open(_state_path(table_dir)) as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        # the seed every InfluxDB database starts with
-        return {
-            "autogen": {
-                "duration_s": 0,
-                "shard_s": 604800,
-                "replica": 1,
-                "default": True,
-            }
+def _load(table_dir: str | None) -> dict:
+    """The policy registry; the seed when ``table_dir`` is None or
+    holds none yet."""
+    if table_dir is not None:
+        try:
+            with open(_state_path(table_dir)) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            pass
+    # the seed every InfluxDB database starts with
+    return {
+        "autogen": {
+            "duration_s": 0,
+            "shard_s": 604800,
+            "replica": 1,
+            "default": True,
         }
+    }
 
 
 def _store(table_dir: str, state: dict) -> None:
@@ -122,13 +126,8 @@ def _check_db(tok: str | None, database: str | None) -> None:
 
 
 def create_retention_policy(
-    statement: str, table_dir: str, database: str | None = None
+    cm: re.Match, table_dir: str, database: str | None = None
 ) -> str:
-    cm = _CREATE_RP_RE.match(statement)
-    if not cm:
-        raise InfluxQLError(
-            f"unparseable CREATE RETENTION POLICY: {statement!r}"
-        )
     _check_db(cm.group("db"), database)
     name = _unquote(cm.group("name"))
     state = _load(table_dir)
@@ -151,13 +150,8 @@ def create_retention_policy(
 
 
 def alter_retention_policy(
-    statement: str, table_dir: str, database: str | None = None
+    am: re.Match, table_dir: str, database: str | None = None
 ) -> str:
-    am = _ALTER_RP_RE.match(statement)
-    if not am:
-        raise InfluxQLError(
-            f"unparseable ALTER RETENTION POLICY: {statement!r}"
-        )
     _check_db(am.group("db"), database)
     name = _unquote(am.group("name"))
     state = _load(table_dir)
@@ -185,13 +179,8 @@ def alter_retention_policy(
 
 
 def drop_retention_policy(
-    statement: str, table_dir: str, database: str | None = None
+    dm: re.Match, table_dir: str, database: str | None = None
 ) -> bool:
-    dm = _DROP_RP_RE.match(statement)
-    if not dm:
-        raise InfluxQLError(
-            f"unparseable DROP RETENTION POLICY: {statement!r}"
-        )
     _check_db(dm.group("db"), database)
     name = _unquote(dm.group("name"))
     state = _load(table_dir)
@@ -208,8 +197,15 @@ def drop_retention_policy(
 
 
 def show_retention_policies(
-    spark, table_dir: str, database: str | None = None, on: str | None = None
+    spark,
+    table_dir: str | None,
+    database: str | None = None,
+    on: str | None = None,
 ):
+    """SHOW RETENTION POLICIES [ON db]: the registry's policies, or
+    with no store dir the seeded ``autogen`` alone (duration ``0s`` =
+    keep forever: retention here is an explicit partition-drop job,
+    not a policy the store enforces continuously)."""
     _check_db(on, database)
     state = _load(table_dir)
     rows = [
@@ -222,7 +218,8 @@ def show_retention_policies(
         )
         for n, p in sorted(state.items())
     ]
-    return spark.createDataFrame(
+    return result_frame(
+        spark,
         rows,
         "name STRING, duration STRING, shardGroupDuration STRING, "
         "replicaN INT, `default` BOOLEAN",

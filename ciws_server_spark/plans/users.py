@@ -41,7 +41,7 @@ import json
 import os
 import re
 
-from .influxql import DEFAULT_DATABASE, InfluxQLError, _unquote
+from .influxql import DEFAULT_DATABASE, InfluxQLError, _unquote, result_frame
 
 _STATE_FILE = "_users.json"
 
@@ -130,8 +130,7 @@ def _check_db(db_tok: str | None, database: str | None) -> str:
     return db
 
 
-def create_user(statement: str, table_dir: str) -> str:
-    m = _CREATE_USER_RE.match(statement)
+def create_user(m: re.Match, table_dir: str) -> str:
     name = _unquote(m.group("name"))
     state = _load(table_dir)
     if name in state:
@@ -145,8 +144,7 @@ def create_user(statement: str, table_dir: str) -> str:
     return name
 
 
-def set_password(statement: str, table_dir: str) -> str:
-    m = _SET_PW_RE.match(statement)
+def set_password(m: re.Match, table_dir: str) -> str:
     name = _unquote(m.group("name"))
     state = _load(table_dir)
     _require(state, name)["hash"] = _hash_password(name, m.group("pw"))
@@ -154,8 +152,7 @@ def set_password(statement: str, table_dir: str) -> str:
     return name
 
 
-def drop_user(statement: str, table_dir: str) -> bool:
-    m = _DROP_USER_RE.match(statement)
+def drop_user(m: re.Match, table_dir: str) -> bool:
     name = _unquote(m.group("name"))
     state = _load(table_dir)
     _require(state, name)
@@ -164,8 +161,7 @@ def drop_user(statement: str, table_dir: str) -> bool:
     return True
 
 
-def grant(statement: str, table_dir: str, database: str | None) -> str:
-    m = _GRANT_RE.match(statement)
+def grant(m: re.Match, table_dir: str, database: str | None) -> str:
     name = _unquote(m.group("name"))
     priv = m.group("priv").upper()
     state = _load(table_dir)
@@ -182,8 +178,7 @@ def grant(statement: str, table_dir: str, database: str | None) -> str:
     return name
 
 
-def revoke(statement: str, table_dir: str, database: str | None) -> str:
-    m = _REVOKE_RE.match(statement)
+def revoke(m: re.Match, table_dir: str, database: str | None) -> str:
     name = _unquote(m.group("name"))
     priv = m.group("priv").upper()
     state = _load(table_dir)
@@ -209,28 +204,14 @@ def revoke(statement: str, table_dir: str, database: str | None) -> str:
 
 
 def show_users(spark, table_dir: str):
-    from pyspark.sql.types import (
-        BooleanType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     state = _load(table_dir)
     rows = [(n, bool(state[n]["admin"])) for n in sorted(state)]
-    schema = StructType(
-        [
-            StructField("user", StringType(), False),
-            StructField("admin", BooleanType(), False),
-        ]
+    return result_frame(
+        spark, rows, "user STRING NOT NULL, admin BOOLEAN NOT NULL"
     )
-    return spark.createDataFrame(rows, schema)
 
 
-def show_grants(spark, table_dir: str, statement: str):
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    m = _SHOW_GRANTS_RE.match(statement)
+def show_grants(spark, table_dir: str, m: re.Match):
     name = _unquote(m.group("name"))
     rec = _require(_load(table_dir), name)
     rows = [(db, p) for db, p in sorted(rec["grants"].items())]
@@ -239,55 +220,24 @@ def show_grants(spark, table_dir: str, statement: str):
         rows = [(db, "ALL PRIVILEGES") for db, _ in rows] or [
             (DEFAULT_DATABASE, "ALL PRIVILEGES")
         ]
-    schema = StructType(
-        [
-            StructField("database", StringType(), False),
-            StructField("privilege", StringType(), False),
-        ]
+    return result_frame(
+        spark, rows, "database STRING NOT NULL, privilege STRING NOT NULL"
     )
-    return spark.createDataFrame(rows, schema)
 
 
 # ---------------------------------------------------------- enforcement
-
-#: statement-prefix → required privilege class. Mirrors InfluxDB 1.x:
-#: queries need READ on the db, data writes need WRITE, and the
-#: cluster-management statements are admin-only.
-_ADMIN_RE = re.compile(
-    r"^\s*(CREATE\s+(DATABASE|RETENTION|CONTINUOUS|USER|SUBSCRIPTION)"
-    r"|DROP\s+(DATABASE|RETENTION|CONTINUOUS|USER|SUBSCRIPTION|SHARD)"
-    r"|ALTER\s+RETENTION|GRANT|REVOKE|SET\s+PASSWORD|KILL\s+QUERY"
-    r"|SHOW\s+(USERS|GRANTS|STATS|DIAGNOSTICS|SHARDS|SHARD\s+GROUPS"
-    r"|QUERIES|SUBSCRIPTIONS))\b",
-    re.IGNORECASE,
-)
-_WRITE_RE = re.compile(
-    r"^\s*(DELETE|DROP\s+(MEASUREMENT|SERIES))\b", re.IGNORECASE
-)
-_INTO_RE = re.compile(r"\bINTO\b", re.IGNORECASE)
-
-
-def required_privilege(statement: str) -> str:
-    """'admin' | 'WRITE' | 'READ' for one statement."""
-    if _ADMIN_RE.match(statement):
-        return "admin"
-    if _WRITE_RE.match(statement) or (
-        re.match(r"^\s*SELECT\b", statement, re.IGNORECASE)
-        and _INTO_RE.search(statement)
-    ):
-        return "WRITE"
-    return "READ"
-
 
 def authorize(
     table_dir: str,
     user: str,
     password: str,
-    statement: str,
+    need: str,
     database: str | None,
 ) -> None:
-    """Front-door enforcement: authenticate, then check the
-    statement's required privilege against the user's grants.
+    """Front-door enforcement: authenticate, then check a statement's
+    required privilege ``need`` (``admin`` | ``WRITE`` | ``READ``, the
+    ``privilege`` of its parsed :class:`~.influxql.Statement`) against
+    the user's grants.
 
     Named errors mirror upstream's HTTP semantics: bad credentials →
     'authentication failed' (401), a privilege the user lacks →
@@ -310,7 +260,6 @@ def authorize(
     rec = state[user]
     if rec.get("admin"):
         return
-    need = required_privilege(statement)
     if need == "admin":
         raise InfluxQLError(
             f"permission denied: {user!r} is not admin"

@@ -17,14 +17,16 @@ Wire semantics implemented (and their mapping):
 * ``/query`` — ``q`` may hold multiple ``;``-separated statements
   (quote-aware split). Both modes share one request prelude and one
   statement runner. The prelude validates the request (``q``,
-  ``epoch``, and ``chunk_size`` when chunked) and authorizes EVERY
+  ``epoch``, and ``chunk_size`` when chunked), parses each statement
+  once (:func:`~..plans.influxql.parse`) and authorizes EVERY parsed
   statement for ``u``/``p`` against the request's database (the
   ``db`` parameter, else the API's configured database, else the
   store's registered one) before ANY statement runs, so a bad
   parameter is a 400 and an authentication / privilege failure a
   401 / 403 (upstream's HTTP codes) with nothing executed. The runner
-  then runs each statement through
-  :func:`~..plans.influxql.run_influxql`; named errors come back
+  then runs each parsed statement through
+  :func:`~..plans.influxql.run_influxql` and serializes it under the
+  statement's series name; named errors come back
   in-body as ``{"statement_id": i, "error": ...}`` (upstream's
   runtime-error shape). DataFrame results serialize to
   the classic JSON: ``{"results": [{"statement_id": i, "series":
@@ -77,9 +79,10 @@ from pyspark.sql import DataFrame, functions as F
 from ..plans import users
 from ..plans.influxql import (
     InfluxQLError,
+    Statement,
+    parse,
     registered_database,
     run_influxql,
-    statement_order_desc,
 )
 from ..plans.line_protocol import (
     FieldTypeConflict,
@@ -294,22 +297,6 @@ def split_statements(q: str) -> list[str]:
     if s:
         out.append(s)
     return out
-
-
-def _series_name(stmt: str) -> str:
-    m = re.search(r"\bFROM\s+(\"[^\"]+\"|/(?:[^/\\]|\\.)*/|\S+)", stmt,
-                  re.IGNORECASE)
-    if m:
-        tok = m.group(1).rstrip(";")
-        if tok.startswith('"') and tok.endswith('"'):
-            return tok[1:-1]
-        if tok.startswith("/"):
-            return tok
-        return tok.split(".")[-1]
-    m = re.match(r"\s*SHOW\s+(\w+(?:\s+\w+)?)", stmt, re.IGNORECASE)
-    if m:
-        return m.group(1).lower().replace(" ", "_")
-    return "results"
 
 
 def _json_time(v, epoch: str | None):
@@ -602,16 +589,17 @@ class InfluxHTTPApi:
         epoch = params.get("epoch") or None
         if epoch is not None and epoch not in _PRECISION_NS:
             raise _RequestError(400, f"invalid epoch precision: {epoch!r}")
-        stmts = split_statements(q)
-        self._authorize(params, stmts)
+        stmts = [parse(s, self.now) for s in split_statements(q)]
+        self._authorize(params, [s.privilege for s in stmts])
         # no registered-database fallback here: run_influxql applies it
         # per statement, so a CREATE DATABASE earlier in the request is
         # seen by the statements after it
         return stmts, params.get("db") or self.database, epoch, size
 
-    def _authorize(self, params: dict, stmts: list[str]) -> None:
-        """Authorize every statement for the request's ``u``/``p``
-        against the request's database: the ``db`` parameter, else the
+    def _authorize(self, params: dict, needs: list[str]) -> None:
+        """Authorize every statement's required privilege (``needs``,
+        one per statement) for the request's ``u``/``p`` against the
+        request's database: the ``db`` parameter, else the
         API's configured database, else the store's registered one.
         The gate ALWAYS runs: with users registered, a request lacking
         ``u`` is a 401 (upstream's auth-enabled behavior); an empty
@@ -624,12 +612,12 @@ class InfluxHTTPApi:
             or registered_database(self.table_dir)
         )
         try:
-            for stmt in stmts:
+            for need in needs:
                 users.authorize(
                     self.table_dir,
                     params.get("u"),
                     params.get("p") or "",
-                    stmt,
+                    need,
                     db,
                 )
         except InfluxQLError as exc:
@@ -639,7 +627,7 @@ class InfluxHTTPApi:
             ) from exc
 
     def _run_statements(
-        self, stmts: list[str], db: str | None, epoch: str | None,
+        self, stmts: list[Statement], db: str | None, epoch: str | None,
         chunk_size: int | None = None,
     ):
         """Run each statement under the contention retry and yield its
@@ -669,9 +657,9 @@ class InfluxHTTPApi:
                     return {"statement_id": i}, None
                 if chunk_size is None:
                     return serialize_frame(
-                        res, _series_name(stmt), i, epoch,
+                        res, stmt.series_name, i, epoch,
                         max_rows=self.max_row_limit,
-                        order_desc=statement_order_desc(stmt),
+                        order_desc=stmt.order_desc,
                     ), None
                 # the table registry is returned alongside: the
                 # reader leases (sinks._lease_version) weakref the
@@ -697,8 +685,8 @@ class InfluxHTTPApi:
                 continue
             try:
                 yield from serialize_frame_chunks(
-                    out, _series_name(stmt), i, epoch, chunk_size,
-                    order_desc=statement_order_desc(stmt),
+                    out, stmt.series_name, i, epoch, chunk_size,
+                    order_desc=stmt.order_desc,
                 )
             except Exception as exc:  # noqa: BLE001 — filtered re-raise
                 # chunks already streamed can't be retried; a snapshot
@@ -722,9 +710,8 @@ class InfluxHTTPApi:
 
     def handle_write(self, params: dict, body: bytes) -> tuple[int, dict | None]:
         try:
-            # /write is the WRITE privilege on the target db —
-            # classified via a representative write statement
-            self._authorize(params, ["DELETE FROM _write_probe"])
+            # /write is the WRITE privilege on the target db
+            self._authorize(params, ["WRITE"])
         except _RequestError as exc:
             return exc.status, exc.body
         if params.get("db"):

@@ -1030,7 +1030,10 @@ def test_max_row_limit_desc_keeps_newest(api, spark):
 def test_statement_order_desc_outer_only():
     """The serializer's order hint reads the OUTER statement's ORDER
     BY; an inner subquery's DESC must not leak out."""
-    from ciws_server_spark.plans.influxql import statement_order_desc
+    from ciws_server_spark.plans.influxql import parse
+
+    def statement_order_desc(q):
+        return parse(q).order_desc
 
     assert statement_order_desc("SELECT f FROM m ORDER BY time DESC")
     assert statement_order_desc("select f from m order by time desc")
@@ -1150,3 +1153,51 @@ def test_table_dropped_after_listing(api, spark, monkeypatch, chunked):
         monkeypatch.setattr(sinks, "load_tables", real)
         assert status == 200, body
         assert body["results"] == [{"statement_id": 0, "error": error}]
+
+
+def test_one_query_match_per_statement(api, spark, monkeypatch):
+    """Each statement is parsed once per request: ``_QUERY_RE`` matches
+    once for a panel and for a ``FROM /re/`` fan-out, and twice for a
+    one-level subquery (the outer statement and the inner one), in
+    both the buffered and the chunked mode; ``parse`` is the only
+    caller of ``_QUERY_RE.match`` in the package."""
+    import pathlib
+
+    import ciws_server_spark
+    from ciws_server_spark.plans import influxql
+
+    package = pathlib.Path(ciws_server_spark.__file__).parent
+    assert sum(
+        p.read_text().count("_QUERY_RE.match") for p in package.rglob("*.py")
+    ) == 1
+
+    class Counting:
+        def __init__(self, rx):
+            self.rx, self.n = rx, 0
+
+        def match(self, *args):
+            self.n += 1
+            return self.rx.match(*args)
+
+    df = spark.createDataFrame(
+        [(dt.datetime(2024, 1, 1, 6, 0), "C", 1.5)],
+        "time timestamp, buildingID string, flowRate double",
+    )
+    sinks.append_points(df, api.table_dir, "campus_b")
+    counting = Counting(influxql._QUERY_RE)
+    monkeypatch.setattr(influxql, "_QUERY_RE", counting)
+    for q, want in (
+        ("SELECT mean(flowRate) FROM campus_flow WHERE "
+         "time >= '2024-01-01' AND time < '2024-01-02' GROUP BY time(1h)", 1),
+        ("SELECT flowRate FROM /^campus/", 1),
+        ("SELECT mean(flowRate) FROM (SELECT flowRate FROM campus_flow) "
+         "GROUP BY time(1h)", 2),
+    ):
+        for handle in (api.handle_query, api.handle_query_chunked):
+            counting.n = 0
+            status, body = handle({"q": q})
+            envelopes = [body] if isinstance(body, dict) else list(body)
+            assert status == 200, (q, envelopes)
+            for env in envelopes:
+                assert "series" in env["results"][0], (q, env)
+            assert counting.n == want, (q, handle.__name__, counting.n)

@@ -195,3 +195,129 @@ def test_front_door_enforcement(spark, tmp_path):
         spark, tabs, "SHOW USERS", table_dir=td,
         credentials=("root", "r"),
     ).count() == 3
+
+
+def _reader_api(spark, td):
+    import datetime as dt
+
+    from ciws_server_spark.sources import sinks
+    from ciws_server_spark.sources.http_api import InfluxHTTPApi
+
+    df = spark.createDataFrame(
+        [(dt.datetime(2024, 1, 1, 6), "A", 1.0)],
+        "time timestamp, buildingID string, flowRate double",
+    )
+    sinks.append_points(df, td, "campus_flow")
+    _run(spark, td, "CREATE USER reader WITH PASSWORD 'p'")
+    _run(spark, td, "GRANT READ ON ciws TO reader")
+    return InfluxHTTPApi(spark, td)
+
+
+def test_read_user_privilege_comes_from_parsed_into(spark, tmp_path):
+    """WRITE is needed for a parsed INTO clause — the statement's own or
+    a subquery's — not for the word INTO in a string or an identifier."""
+    api = _reader_api(spark, str(tmp_path))
+    reader = {"u": "reader", "p": "p"}
+    for q in (
+        "SELECT flowRate FROM campus_flow WHERE buildingID = 'INTO'",
+        'SELECT "into" FROM campus_flow',
+    ):
+        status, body = api.handle_query({"q": q, **reader})
+        assert status == 200, (q, body)
+        assert "error" not in body["results"][0], (q, body)
+    for q in (
+        "SELECT mean(flowRate) INTO r FROM campus_flow GROUP BY time(1h)",
+        "SELECT mean(flowRate) FROM "
+        "(SELECT flowRate INTO r FROM campus_flow) GROUP BY time(1h)",
+    ):
+        status, body = api.handle_query({"q": q, **reader})
+        assert (status, body) == (
+            403, {"error": "permission denied: 'reader' lacks WRITE on 'ciws'"}
+        ), q
+
+
+#: One statement of every kind the dispatcher runs, with the privilege
+#: class it needs (InfluxDB 1.x's split: server management is admin,
+#: data writes are WRITE on the database, queries are READ on it).
+KIND_TABLE = [
+    ("CREATE DATABASE ciws", "create_database", "admin"),
+    ("DROP DATABASE ciws", "drop_database", "admin"),
+    ("CREATE RETENTION POLICY rp ON ciws DURATION 1d REPLICATION 1",
+     "create_retention_policy", "admin"),
+    ("ALTER RETENTION POLICY rp ON ciws DURATION 2d",
+     "alter_retention_policy", "admin"),
+    ("DROP RETENTION POLICY rp ON ciws", "drop_retention_policy", "admin"),
+    ("SHOW RETENTION POLICIES ON ciws", "show_retention_policies", "READ"),
+    ("CREATE USER u WITH PASSWORD 'p'", "create_user", "admin"),
+    ("SET PASSWORD FOR u = 'q'", "set_password", "admin"),
+    ("DROP USER u", "drop_user", "admin"),
+    ("GRANT READ ON ciws TO u", "grant", "admin"),
+    ("REVOKE READ ON ciws FROM u", "revoke", "admin"),
+    ("SHOW USERS", "show_users", "admin"),
+    ("SHOW GRANTS FOR u", "show_grants", "admin"),
+    ("CREATE CONTINUOUS QUERY cq ON ciws BEGIN SELECT mean(v) INTO r "
+     "FROM m GROUP BY time(1h) END", "create_continuous_query", "admin"),
+    ("DROP CONTINUOUS QUERY cq ON ciws", "drop_continuous_query", "admin"),
+    ("SHOW CONTINUOUS QUERIES", "show_continuous_queries", "READ"),
+    ("SHOW SHARDS", "show_shards", "admin"),
+    ("SHOW SHARD GROUPS", "show_shard_groups", "admin"),
+    ("DROP SHARD 1", "drop_shard", "admin"),
+    ("SHOW QUERIES", "show_queries", "admin"),
+    ("KILL QUERY 1", "kill_query", "admin"),
+    ("SHOW STATS", "show_stats", "admin"),
+    ("SHOW DIAGNOSTICS", "show_diagnostics", "admin"),
+    ("CREATE SUBSCRIPTION s ON ciws.autogen DESTINATIONS ALL 'http://h:1'",
+     "create_subscription", "admin"),
+    ("DROP SUBSCRIPTION s ON ciws.autogen", "drop_subscription", "admin"),
+    ("SHOW SUBSCRIPTIONS", "show_subscriptions", "admin"),
+    ("DROP SERIES FROM m WHERE a = 'x'", "drop_series", "WRITE"),
+    ("DROP MEASUREMENT m", "drop_measurement", "WRITE"),
+    ("DELETE FROM m WHERE time < '2024-01-01'", "delete", "WRITE"),
+    ("SELECT mean(v) INTO r FROM m GROUP BY time(1h)", "into", "WRITE"),
+    ("EXPLAIN SELECT v FROM m", "explain", "READ"),
+    ("SHOW MEASUREMENTS", "show", "READ"),
+    ("SELECT v FROM m", "select", "READ"),
+]
+
+
+def test_parsed_kind_is_the_kind_that_runs(spark, tmp_path, monkeypatch):
+    """For every dispatcher kind, ``parse(s).kind`` names the handler
+    run_influxql runs, and ``parse(s).privilege`` is its class."""
+    from ciws_server_spark.plans import influxql
+
+    table = influxql._kinds()
+    assert {k for _, k, _ in KIND_TABLE} == set(table) | {
+        "explain", "show", "select"
+    }
+    ran = []
+    monkeypatch.setattr(influxql, "_kinds", lambda: {
+        k: row[:4] + ((lambda c, s, k=k: ran.append(k)),)
+        for k, row in table.items()
+    })
+    monkeypatch.setattr(
+        influxql, "query_measurement",
+        lambda spark, tables, stmt, *a, **kw: ran.append(stmt.kind),
+    )
+    for stmt, kind, privilege in KIND_TABLE:
+        parsed = influxql.parse(stmt)
+        assert (parsed.kind, parsed.privilege) == (kind, privilege), stmt
+        ran.clear()
+        run_influxql(spark, {}, stmt, table_dir=str(tmp_path))
+        assert ran == [kind], stmt
+
+
+def test_unmatched_statement_kind_from_leading_keywords():
+    """A statement no regex matches keeps its leading keywords' class,
+    and still runs into the unparseable error."""
+    from ciws_server_spark.plans.influxql import parse
+
+    for stmt, privilege in (
+        ("CREATE DATABASE a b", "admin"),
+        ("SHOW GRANTS", "admin"),
+        ("DROP MEASUREMENT a b", "WRITE"),
+        ("SELECT v INTO", "READ"),
+    ):
+        parsed = parse(stmt)
+        assert (parsed.privilege, parsed.match) == (privilege, None), stmt
+        with pytest.raises(InfluxQLError, match="unparseable InfluxQL"):
+            run_influxql(None, {}, stmt)

@@ -675,6 +675,26 @@ def test_one_measurement_write_is_at_most_three_jobs(spark, tmp_path):
     assert got == ["S1", "m1", 7.5, True, "a b"]
 
 
+def test_show_measurements_runs_no_python_worker(spark):
+    """A SHOW frame is built on the driver from an Arrow table — a local
+    relation — so answering SHOW MEASUREMENTS starts no Python worker."""
+    from ciws_server_spark.plans.influxql import run_influxql
+
+    tables = {n: _edge_frame(spark) for n in ("m_a", "m_b")}
+    sc = spark.sparkContext
+    group = "plan-shapes-show"
+    sc.setJobGroup(group, "show measurements")
+    try:
+        got = run_influxql(spark, tables, "SHOW MEASUREMENTS").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert [r["name"] for r in got] == ["m_a", "m_b"]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert _python_stage_names(sc, jobs) == set()
+
+
 def test_ingest_pass_with_moves_runs_no_python_worker(spark, tmp_path):
     """Archive and quarantine moves rename on the driver: no job of a
     run_ingest_pass — stream batches or moves — starts a Python worker."""

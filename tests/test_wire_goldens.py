@@ -99,6 +99,17 @@ GOLDENS = [
      {"q": "SELECT * FROM /^(campus_flow|sys_load)$/ ORDER BY time"},
      200,
      '{"results":[{"series":[{"columns":["time","flowRate","buildingID","date","host","load"],"name":"campus_flow","values":[["2024-01-01T06:00:00Z",2.5,"A","2024-01-01",null,null],["2024-01-01T06:30:00.25Z",7.5,"B","2024-01-01",null,null]]},{"columns":["time","flowRate","buildingID","date","host","load"],"name":"sys_load","values":[["2024-01-01T07:00:00Z",null,null,null,"h1",1.0]]}],"statement_id":0}]}'),
+    # a series is named after its measurement — the key influxdb-python's
+    # get_points(measurement=...) looks it up by: qualifiers stripped,
+    # and a subquery's series named after the inner statement's
+    ("select_qualified_from_name",
+     {"q": 'SELECT flowRate FROM "ciws"."autogen"."campus_flow" '
+           "ORDER BY time"}, 200,
+     '{"results":[{"series":[{"columns":["time","flowRate"],"name":"campus_flow","values":[["2024-01-01T06:00:00Z",2.5],["2024-01-01T06:30:00.25Z",7.5]]}],"statement_id":0}]}'),
+    ("subquery_name",
+     {"q": "SELECT mean(flowRate) FROM (SELECT flowRate FROM campus_flow)"},
+     200,
+     '{"results":[{"series":[{"columns":["mean_flowRate"],"name":"campus_flow","values":[[5.0]]}],"statement_id":0}]}'),
     ("invalid_epoch_400",
      {"q": "SELECT flowRate FROM campus_flow", "epoch": "eons"}, 400,
      '{"error":"invalid epoch precision: \'eons\'"}'),
@@ -162,6 +173,20 @@ def test_chunked_envelope_golden(gapi):
         '{"results":[{"series":[{"columns":["time","flowRate"],"name":"campus_flow","partial":true,"values":[["2024-01-01T06:00:00Z",2.5]]}],"statement_id":0}]}',
         '{"results":[{"series":[{"columns":["time","flowRate"],"name":"campus_flow","values":[["2024-01-01T06:30:00.25Z",7.5]]}],"statement_id":0}]}',
     ]
+
+
+@pytest.mark.parametrize(
+    "name", ["select_qualified_from_name", "subquery_name"]
+)
+def test_chunked_series_name_golden(gapi, name):
+    """The chunked mode names a qualified-FROM and a subquery series
+    exactly as the buffered goldens do."""
+    (params, golden) = next(
+        (g[1], g[3]) for g in GOLDENS if g[0] == name
+    )
+    status, chunks = gapi.handle_query_chunked(dict(params))
+    assert status == 200
+    assert [_dumps(env) for env in chunks] == [golden]
 
 
 def test_write_timestamp_bounds_golden(gapi):

@@ -102,7 +102,7 @@ def gen_write_body(r: random.Random) -> bytes:
 
 
 def main() -> None:
-    from ciws_server_spark.plans import users
+    from ciws_server_spark.plans.influxql import parse
     from ciws_server_spark.session import get_spark
     from ciws_server_spark.sources.http_api import InfluxHTTPApi
     from tests.test_influxql_statement_fuzz import gen_statement
@@ -145,7 +145,7 @@ def main() -> None:
                     else:
                         for env in body:
                             json.dumps(env)
-                    if users.required_privilege(stmt) == "READ":
+                    if parse(stmt).privilege == "READ":
                         # a READ statement mutates nothing, so the
                         # buffered mode must give the same request the
                         # same status
